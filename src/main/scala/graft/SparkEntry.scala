@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.Processor
+import graft.plans.ExtractOperator
 import graft.queries.{CorpusOps, PipelineOps, Relational, TextOps, TrainOps, VectorOps, WebOps}
 import graft.synth.PageGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,11 +23,8 @@ object SparkEntry {
     * deterministic page table (driver smoke-checks rows > 0).
     */
   def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    PageGen.generate(spark, 300).mapPartitions { it =>
-      val proc = Processor.default
-      it.map(p => proc.extract(p, "balanced"))
-    }.select("url", "pdf_type", "word_count", "extraction_method", "success")
+    ExtractOperator.extract(PageGen.generate(spark, 300).toDF(), "balanced", slim = false)
+      .select("url", "pdf_type", "word_count", "extraction_method", "success")
       .where(col("success"))
   }
 

@@ -122,12 +122,11 @@ object CorpusPipeline {
     // Each piece is APPENDED while its stage's inputs are still cached,
     // so the flag never recomputes the kernel; drop detection is a
     // url-keyed anti-join per stage (the honest cost of the audit).
+    // The sidecar is cleared on every run: it is append-mode, and one left
+    // by an earlier --provenance run would misdescribe this run's drops.
     val provPath = s"${a.out}/provenance"
-    if (a.provenance) {
-      val p = new org.apache.hadoop.fs.Path(provPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // append-mode sidecar: clear prior runs
-    }
+    val provDir = new org.apache.hadoop.fs.Path(provPath)
+    provDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(provDir, true)
     def recordDrops(df: DataFrame): Unit =
       if (a.provenance)
         df.select("url", "stage", "detail").write.mode("append").parquet(provPath)
@@ -138,7 +137,7 @@ object CorpusPipeline {
           .withColumn("stage", lit(stage)).withColumn("detail", lit("")))
 
     // 1. Extraction (slim schema — the corpus path).
-    val extracted = ExtractJob.extractKernel(pages, a.quality, slim = true)
+    val extracted = graft.plans.ExtractOperator.extract(pagesDf, a.quality, slim = true)
       .where(col("success") && length(col("text")) > 0)
       .select("url", "lang", "text", "word_count").persist()
     stages += "extracted" -> extracted.count()

@@ -1,8 +1,8 @@
 package graft.app
 
-import graft.extract.Processor
 import graft.jobs.{Checkpoint, LineageRow}
 import graft.model.{Enums, KernelPage, Page}
+import graft.plans.ExtractOperator
 import graft.synth.PageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** The extraction pipeline as a spark-submit batch job (SURVEY.md §3.1's
   * Spark lifecycle + §4.4 physical plan of record):
   *
-  *   scan(pages, pushed filters) → project → [map-only] ExtractKernel
+  *   scan(pages, pushed filters) → project → [map-only] GraftExtract
   *     → write results partitionBy(bucket) → append lineage rows
   *
   * Scale design decisions (10^12-row design point):
@@ -122,27 +122,18 @@ object ExtractJob {
 
   def bucketExpr(buckets: Int): Column = pmod(xxhash64(col("url")), lit(buckets)).cast("int")
 
-  /** The extraction kernel stage: opaque to Catalyst, so all pruning/
-    * filtering must happen before this call (SURVEY.md §4.2 obligation 1).
+  /** The extraction kernel stage over the kernel's input projection:
+    * one `GraftExtract` operator (plans.ExtractOperator), whose output
+    * is `ExtractionRecord`'s columns, or `SlimRecord`'s when `slim`. The
+    * operator reads only url/html/lang and runs the shared, stateless
+    * JVM-wide Processor instance — the reference's lazy backend
+    * singletons (service/main.py:50-55), O(1) memory per row. Filters on
+    * the input belong before this call: Catalyst does not push
+    * predicates through the operator.
     */
   def extractKernel(pages: Dataset[KernelPage], quality: String,
-      slim: Boolean = false): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // Per-partition processor instance = the reference's lazy backend
-    // singletons (service/main.py:50-55) — built once per task, O(1)
-    // memory per row.
-    if (slim)
-      pages.mapPartitions { it =>
-        val proc = Processor.default
-        it.map(p => proc.extract(p, quality).toSlim)
-      }.toDF()
-    else
-      pages.mapPartitions { it =>
-        val proc = Processor.default
-        it.map(p => proc.extract(p, quality))
-      }.toDF()
-  }
+      slim: Boolean = false): DataFrame =
+    ExtractOperator.extract(pages.toDF(), quality, slim)
 
   def loadPages(spark: SparkSession, a: Args): Dataset[Page] = {
     import spark.implicits._
@@ -154,7 +145,7 @@ object ExtractJob {
         graft.sources.Warc.readPages(spark, a.input).toDF()
       else if (a.input.nonEmpty) TableIO.read(spark, a.input)
       else PageGen.generate(spark, a.rows, a.seed).toDF()
-    // Pushed-down predicates + projection BEFORE the opaque kernel.
+    // Pushed-down predicates + projection BEFORE the kernel.
     val filtered = if (a.lang.nonEmpty && a.inputFormat != "warc")
       df.where(col("lang") === a.lang) else df
     filtered.select("url", "warc_ts", "html", "text", "lang").as[Page]
@@ -219,17 +210,16 @@ object ExtractJob {
       val sub = if (a.repartition > 0) sub0.repartition(a.repartition) else sub0
       import spark.implicits._
 
-      // Project to the kernel's input columns BEFORE the opaque stage:
-      // the parquet scan then skips `text`/`warc_ts` entirely (the
-      // deserializer for the full Page row would force-read them).
-      val kernelIn = sub.select("url", "html", "lang").as[KernelPage]
+      // The operator projects to the kernel's input columns itself, so
+      // the parquet scan skips `text`/`warc_ts` entirely.
       // --two-pass is the fast→accurate cascade the Args doc promises:
       // pass 2 always runs `accurate` (with --quality fast the old
       // a.quality wiring re-ran the identical fast kernel over the
       // flagged subset — doubled work, zero rescue). --quality keeps
       // governing the single-pass path only.
-      val recs0 = (if (a.twoPass) TwoPass.extract(kernelIn, slim = a.slim)
-                   else extractKernel(kernelIn, a.quality, a.slim))
+      val recs0 = (if (a.twoPass)
+                     TwoPass.extract(sub.select("url", "html", "lang").as[KernelPage], slim = a.slim)
+                   else ExtractOperator.extract(sub, a.quality, a.slim))
         .withColumn("bucket", bucketExpr(a.buckets))
       // Cluster output files by bucket: one exchange of the COMPACT
       // post-kernel records (raw html never shuffles — it's dropped by

@@ -9,14 +9,15 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkUtil {
 
-  /** Parquet output codec — SINGLE owner of the default, shared by this
-    * session factory and graft.Bench so the bench always measures the
-    * codec production writes with. zstd over snappy trades abundant CPU
-    * for scarce memory-channel/storage bytes — measured on the job
-    * bench (8M rows, local[16]): 19.4 s → 17.0 s (+12% throughput) and
-    * 4→16 scaling 0.70 → 0.82, because the parquet write's memcpy
-    * traffic is the job's non-scaling term (BENCH.md, MemBw). On a
-    * real cluster the same trade cuts storage + replication bytes.
+  /** Parquet output codec — SINGLE owner of the default, read by this
+    * session factory, which the benchmark (perfbench/) also uses, so it
+    * always measures the codec production writes with. zstd over snappy
+    * trades abundant CPU for scarce memory-channel/storage bytes —
+    * measured on the job bench (8M rows, local[16], 32-core host):
+    * 19.4 s → 17.0 s (+12% throughput) and 4→16 scaling 0.70 → 0.82,
+    * because the parquet write's memcpy traffic is the job's
+    * non-scaling term (BENCH.md). On a real cluster the same trade cuts
+    * storage + replication bytes.
     */
   def parquetCodec: String = sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd")
 

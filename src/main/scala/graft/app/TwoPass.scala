@@ -1,6 +1,7 @@
 package graft.app
 
 import graft.model.KernelPage
+import graft.plans.ExtractOperator
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +58,7 @@ object TwoPass {
     */
   def extract(pages: Dataset[KernelPage], firstQuality: String = "fast",
       secondQuality: String = "accurate", slim: Boolean = false): DataFrame = {
-    val pass1 = ExtractJob.extractKernel(pages, firstQuality, slim)
+    val pass1 = ExtractOperator.extract(pages.toDF(), firstQuality, slim)
       .localCheckpoint()
     val dup = pass1.groupBy("url").count()
       .where(col("count") > 1).limit(1).collect()
@@ -68,10 +69,7 @@ object TwoPass {
         "dedupe revisit snapshots first (CorpusPipeline.latestSnapshot / q77)")
     val flagged = pass1.where(needsSecondPass).select("url")
     val in2 = pages.toDF().join(flagged, Seq("url"))
-      .select("url", "html", "lang")
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val pass2 = ExtractJob.extractKernel(in2.as[KernelPage], secondQuality, slim)
+    val pass2 = ExtractOperator.extract(in2, secondQuality, slim)
     val all = pass1.withColumn("pass", lit(1))
       .unionByName(pass2.withColumn("pass", lit(2)))
     val w = Window.partitionBy("url")

@@ -26,9 +26,9 @@ object DocParser {
       // (differential spec). The DOM path is the production choice: with
       // the tokenizer no longer allocating per-tag attribute maps, the
       // tree build + recursive walk measures ~35% faster than the
-      // frame-stack stream replay on the mixed corpus (KernelProfile:
-      // 5.4 vs 8.4 µs/doc; 9.5 vs 10.8 on article-heavy). The stream
-      // twin stays as the differential-fuzz counterpart.
+      // frame-stack stream replay on the mixed corpus (single-thread
+      // kernel profile: 5.4 vs 8.4 µs/doc; 9.5 vs 10.8 on article-heavy).
+      // The stream twin stays as the differential-fuzz counterpart.
       try Right(BlockSegmenter.parseHtml(graft.text.Charsets.decode(payload)))
       catch { case e: Exception => Left(s"HTML parse error: ${e.getMessage}") }
 }

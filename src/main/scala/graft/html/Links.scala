@@ -71,8 +71,9 @@ object Links {
     if (noFrag.isEmpty) None
     else try {
       val r = new java.net.URI(baseUrl).resolve(new java.net.URI(noFrag))
-      r.getScheme match {
-        case "http" | "https" if r.getHost != null => Some(r.toString)
+      // Schemes are case-insensitive (RFC 3986 §3.1): HTTP://Host/a is fetchable.
+      Option(r.getScheme).map(_.toLowerCase(java.util.Locale.ROOT)) match {
+        case Some("http" | "https") if r.getHost != null => Some(r.toString)
         case _ => None
       }
     } catch { case _: Exception => None }

@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-bucket lineage row appended to the checkpoint table after a
@@ -27,18 +28,29 @@ final case class LineageRow(
 object Checkpoint {
 
   /** Buckets already completed for this run_id (empty when the table
-    * doesn't exist yet). Small by construction (≤ numBuckets rows) —
-    * collected to the driver and broadcast as an isin filter, never a
-    * shuffle.
+    * doesn't exist yet or holds no data files). Small by construction
+    * (≤ numBuckets rows) — collected and broadcast as an isin filter,
+    * never a shuffle. Paths go through the Hadoop FileSystem, so
+    * `hdfs://`, `s3a://` and `file://` checkpoints resume; a table that
+    * exists but cannot be read fails the job rather than silently
+    * recomputing every bucket.
     */
   def completedBuckets(spark: SparkSession, path: String, runId: String): Set[Int] = {
-    if (!new java.io.File(path).exists()) return Set.empty
-    try {
-      graft.app.TableIO.read(spark, path)
-        .where(col("run_id") === runId && col("status") === "completed")
-        .select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-    } catch { case _: Exception => Set.empty }
+    val (fs, p) = resolve(spark, path)
+    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
+      val name = s.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    if (!hasData) Set.empty
+    else graft.app.TableIO.read(spark, path)
+      .where(col("run_id") === runId && col("status") === "completed")
+      .select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSet
+  }
+
+  private def resolve(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** Append lineage rows for buckets whose results were just written. */
@@ -53,27 +65,22 @@ object Checkpoint {
     * (Iceberg: `DELETE WHERE completed_ts < now() - INTERVAL 24 HOURS`.)
     */
   def cleanupExpired(spark: SparkSession, path: String, ttlHours: Int = 24): Long = {
-    if (!new java.io.File(path).exists()) return 0L
+    val (fs, p) = resolve(spark, path)
+    if (!fs.exists(p)) return 0L
     val df = graft.app.TableIO.read(spark, path).cache()
     try {
       val cutoff = new java.sql.Timestamp(System.currentTimeMillis() - ttlHours * 3600L * 1000L)
       val keep = df.where(col("completed_ts") >= lit(cutoff))
       val dropped = df.count() - keep.count()
       if (dropped > 0) {
-        val tmp = path + ".tmp"
-        keep.write.format(graft.app.TableIO.format).mode(SaveMode.Overwrite).save(tmp)
-        val fs = new java.io.File(path)
-        val bak = new java.io.File(path + ".old")
-        fs.renameTo(bak)
-        new java.io.File(tmp).renameTo(fs)
-        deleteRecursively(bak)
+        val tmp = new Path(path + ".tmp")
+        val bak = new Path(path + ".old")
+        keep.write.format(graft.app.TableIO.format).mode(SaveMode.Overwrite).save(tmp.toString)
+        fs.delete(bak, true) // a stale .old would make rename nest p inside it
+        require(fs.rename(p, bak) && fs.rename(tmp, p), s"checkpoint swap failed at $path")
+        fs.delete(bak, true)
       }
       dropped
     } finally df.unpersist()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.extract.Processor
+import graft.plans.ExtractOperator
 import graft.json.JsonRepair
 import graft.model.Page
 import graft.synth.PageGen
@@ -22,6 +22,10 @@ object PipelineOps {
 
   /** Deterministic page table; independent of sfDir by design. */
   private def pages(s: SparkSession, n: Long): Dataset[Page] = PageGen.generate(s, n)
+
+  /** Full extraction records of a page table (the GraftExtract operator). */
+  private def extract(pages: Dataset[Page], quality: String): DataFrame =
+    ExtractOperator.extract(pages.toDF(), quality, slim = false)
 
   /** One binary "multimodal" record: treat payload as opaque bytes with
     * a stubbed decode (deterministic fake dims — the real image/audio
@@ -81,11 +85,8 @@ object PipelineOps {
     // kernel pass, map-only (§4.4 plan of record).
     ("x40_extract_balanced",
       (s, _) => {
-        import s.implicits._
-        pages(s, 1200).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "balanced"))
-        }.select("url", "pdf_type", "total_pages", "word_count",
+        extract(pages(s, 1200), "balanced")
+          .select("url", "pdf_type", "total_pages", "word_count",
             "extraction_method", "confidence", "success")
           .orderBy("url")
       }, None),
@@ -93,11 +94,8 @@ object PipelineOps {
     // ---- Classification-only slice (§3.3): per-type corpus histogram.
     ("x41_classify_stats",
       (s, _) => {
-        import s.implicits._
-        pages(s, 2000).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "fast")) // fast → never OCR: pure classify+direct
-        }.groupBy("pdf_type")
+        extract(pages(s, 2000), "fast") // fast → never OCR: pure classify+direct
+          .groupBy("pdf_type")
           .agg(count(lit(1)).as("n_docs"),
                round(avg("confidence"), 6).as("avg_confidence"),
                sum(col("word_count").cast("long")).as("total_words"))
@@ -108,11 +106,8 @@ object PipelineOps {
     // url → composed text with page markers).
     ("x42_extract_text",
       (s, _) => {
-        import s.implicits._
-        pages(s, 300).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "accurate"))
-        }.select("url", "text", "word_count").orderBy("url")
+        extract(pages(s, 300), "accurate")
+          .select("url", "text", "word_count").orderBy("url")
       }, None),
 
     // ---- Exact dedup over *extracted* text: PageGen plants ~6%
@@ -132,11 +127,8 @@ object PipelineOps {
     // prefix needs no SQL replication.
     ("q43_dedup_extracted",
       (s, _) => {
-        import s.implicits._
-        pages(s, 2000).mapPartitions { it =>
-          val proc = Processor.default
-          it.map(p => proc.extract(p, "balanced"))
-        }.where(col("success") && length(col("text")) > 0)
+        extract(pages(s, 2000), "balanced")
+          .where(col("success") && length(col("text")) > 0)
           .withColumn("id", regexp_extract(col("url"), "p(\\d+)\\.html$", 1).cast("long"))
           .groupBy(md5(col("text")).as("digest"))
           .agg(min("id").as("canonical_id"), count(lit(1)).as("n_docs"))
@@ -558,9 +550,9 @@ object PipelineOps {
       }, None),
 
     // ---- The extraction kernel as a first-class Catalyst operator
-    // (plans.GraftExtract: LogicalPlan + Strategy + SparkPlan) — same
-    // results as x40's typed mapPartitions form, but EXPLAIN-visible
-    // and with the unused legacy text column pruned from the scan.
+    // (plans.GraftExtract: LogicalPlan + Strategy + SparkPlan) over a
+    // parquet pages table — same results as x40, with the unused legacy
+    // text column pruned from the scan.
     ("x50_extract_operator",
       (s, _) => {
         // Cache path keyed by (generator version, rows, seed) so a stale
@@ -568,7 +560,7 @@ object PipelineOps {
         val dir = s"/tmp/graft_q/op_pages_v${PageGen.genVersion}_1200_42"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
           pages(s, 1200).toDF().repartition(4).write.mode("overwrite").parquet(dir)
-        graft.plans.ExtractOperator.extract(s.read.parquet(dir), "balanced")
+        ExtractOperator.extract(s.read.parquet(dir), "balanced", slim = false)
           .select("url", "pdf_type", "total_pages", "word_count",
             "extraction_method", "confidence", "success")
           .orderBy("url")

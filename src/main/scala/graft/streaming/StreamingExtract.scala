@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.extract.Processor
+import graft.plans.ExtractOperator
 import graft.model.Page
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * job layer is batch-with-progress, which maps to ExtractJob. This
   * module is the graft-added incremental path for a continuously-fed
   * pages table: the SAME kernel runs per micro-batch, so batch and
-  * streaming share one code path (`readStream` → `mapPartitions(kernel)`
+  * streaming share one code path (`readStream` → `GraftExtract`
   * → `writeStream`), with exactly-once parquet output via the streaming
   * checkpoint — the streaming twin of ExtractJob's bucket lineage.
   *
@@ -28,22 +28,18 @@ object StreamingExtract {
   private val DocumentsSchema =
     "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
-  /** Incremental extraction over a parquet directory source. The scan
-    * projects to the kernel's input columns (model.KernelPage) — the
-    * unused golden `text` column never leaves the parquet reader.
-    */
-  def extractStream(spark: SparkSession, inputDir: String, quality: String): DataFrame = {
-    import spark.implicits._
-    val pages = spark.readStream
+  /** The pages table as a stream (parquet directory source). */
+  private def pageStream(spark: SparkSession, inputDir: String): DataFrame =
+    spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[Page].schema)
       .parquet(inputDir)
-      .select("url", "html", "lang")
-      .as[graft.model.KernelPage]
-    pages.mapPartitions { it =>
-      val proc = Processor.default
-      it.map(p => proc.extract(p, quality))
-    }.toDF()
-  }
+
+  /** Incremental extraction over a parquet directory source. The
+    * operator projects to the kernel's input columns — the unused golden
+    * `text` column never leaves the parquet reader.
+    */
+  def extractStream(spark: SparkSession, inputDir: String, quality: String): DataFrame =
+    ExtractOperator.extract(pageStream(spark, inputDir), quality, slim = false)
 
   /** Run to completion over currently-available files (AvailableNow =
     * bounded run with streaming semantics + checkpoint resume), writing
@@ -273,18 +269,6 @@ object StreamingExtract {
       .start()
   }
 
-  /** Streaming dedup output row: extraction output + the content hash it
-    * was deduplicated on (md5 of extracted text — 128 bits so hash
-    * collisions are negligible even at 10^12 documents; a 64-bit key
-    * would produce ~10^4 false merges there) + the page's event time.
-    */
-  final case class DedupRow(
-      url: String,
-      warc_ts: java.sql.Timestamp,
-      content_hash: String,
-      word_count: Int,
-      text: String)
-
   /** Incremental EXACT dedup: extract each page, drop documents whose
     * extracted text was already seen. The streaming twin of the batch
     * hash-groupBy dedup (queries.TextOps q22) for a continuously-fed
@@ -316,26 +300,13 @@ object StreamingExtract {
       checkpointDir: String,
       quality: String = "balanced",
       lateness: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
-      .parquet(inputDir)
-      .select("url", "warc_ts", "html", "lang") // golden `text` pruned
-      .as[(String, java.sql.Timestamp, Array[Byte], String)]
-    val rows = pages.mapPartitions { it =>
-      val proc = Processor.default
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { case (url, ts, html, lang) =>
-        val p = graft.model.KernelPage(url, html, lang)
-        val r = proc.extract(p, quality)
-        if (r.success && r.text.nonEmpty) {
-          md.reset()
-          val hash = md.digest(r.text.getBytes("UTF-8"))
-            .map(b => f"$b%02x").mkString
-          Some(DedupRow(r.url, ts, hash, r.word_count, r.text))
-        } else None
-      }
-    }
+    val rows = ExtractOperator.extract(pageStream(spark, inputDir), quality,
+        slim = true, passthrough = Seq("warc_ts"))
+      .where(col("success") && length(col("text")) > 0)
+      // md5 of the extracted text: 128 bits, so collisions are negligible
+      // even at 10^12 documents (a 64-bit key would merge ~10^4 there).
+      .select(col("url"), col("warc_ts"), md5(col("text")).as("content_hash"),
+        col("word_count"), col("text"))
     val deduped = lateness match {
       case Some(delay) =>
         rows.withWatermark("warc_ts", delay)
@@ -485,11 +456,6 @@ object StreamingExtract {
       sk.join(dups, Seq("doc_id"), "left_anti"), sigDir, batchId)
   }
 
-  /** One metrics row per extracted page (event time carried through the
-    * kernel for windowing).
-    */
-  final case class StreamMetric(warc_ts: java.sql.Timestamp, pdf_type: String, word_count: Int)
-
   /** Streaming metrics roll-up: tumbling event-time windows over
     * warc_ts with a watermark bounding state (per-window docs and word
     * volume by pdf_type). Complete mode → in-memory table `tableName`.
@@ -499,19 +465,8 @@ object StreamingExtract {
       inputDir: String,
       tableName: String,
       quality: String = "fast"): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
-      .parquet(inputDir)
-      .select("url", "warc_ts", "html", "lang") // golden `text` pruned
-      .as[(String, java.sql.Timestamp, Array[Byte], String)]
-    pages.mapPartitions { it =>
-      val proc = Processor.default
-      it.map { case (url, ts, html, lang) =>
-        val r = proc.extract(graft.model.KernelPage(url, html, lang), quality)
-        StreamMetric(ts, r.pdf_type, r.word_count)
-      }
-    }
+    ExtractOperator.extract(pageStream(spark, inputDir), quality,
+        slim = true, passthrough = Seq("warc_ts"))
       .withWatermark("warc_ts", "1 hour")
       .groupBy(window(col("warc_ts"), "1 day"), col("pdf_type"))
       .agg(count(lit(1)).as("n_docs"),

@@ -213,18 +213,4 @@ object PageGen {
     import spark.implicits._
     spark.range(0, rows).mapPartitions(_.map(id => row(seed, id, paraScale)))
   }
-
-  /** Generate-and-cache a parquet pages table (used by Verify/Bench so
-    * repeated runs skip generation).
-    */
-  def ensureParquet(spark: SparkSession, rows: Long, dir: String, seed: Long = 42L): String = {
-    val path = s"$dir/pages_v${genVersion}_${rows}_$seed.parquet"
-    val marker = new java.io.File(s"$path/_SUCCESS")
-    if (!marker.exists()) {
-      generate(spark, rows, seed)
-        .repartition(math.max(2, (rows / 25000L).toInt))
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
 }

@@ -1,30 +1,29 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.app.SparkUtil
+import org.apache.spark.sql.execution.SQLExecution
 
-/** Time one SparkEntry query with a noop sink (iteration aid):
-  *   sbt -batch "runMain graft.tools.TimeQuery q24_minhash_lsh /root/testdata/sf0.1 [cpus]"
+/** Time SparkEntry queries end to end with a discarding sink, then print
+  * the final adaptive physical plan of each query's last rep (iteration
+  * aid for join-strategy and exchange-reuse checks):
+  *   sbt -batch "runMain graft.tools.TimeQuery <sfDir> <name> [name...]"
+  * Parallelism follows SPARK_GRAFT_CPUS, as for every other main.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    (1 to 2).foreach { rep =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      println(f"[time] $name rep$rep: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    spark.stop()
+    require(args.length >= 2, "usage: TimeQuery <sfDir> <name> [name...]")
+    val sfDir = args(0)
+    val spark = SparkUtil.session("graft-time-query")
+    try args.drop(1).foreach { name =>
+      val plans = (1 to 2).map { rep =>
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        val t0 = System.nanoTime()
+        SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
+        println(f"[time] $name rep$rep: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        qe.executedPlan
+      }
+      println(plans.last)
+    } finally spark.stop()
   }
 }

@@ -46,6 +46,14 @@ class CorpusPipelineSpec extends SparkSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("a run without --provenance clears the sidecar an earlier run left in --out") {
+    val out = tmpDir("cp_prov_stale")
+    CorpusPipeline.run(spark, Args(rows = 400, out = out, provenance = true))
+    assert(new java.io.File(s"$out/provenance").exists())
+    CorpusPipeline.run(spark, Args(rows = 400, out = out))
+    assert(!new java.io.File(s"$out/provenance").exists(), "stale provenance sidecar kept")
+  }
+
   test("--host-cap bounds every host's surviving docs and is a strict subset stage") {
     import spark.implicits._
     val out = tmpDir("cp_cap")

@@ -230,6 +230,25 @@ class ExtractJobSpec extends SparkSuite {
     assert(one.toSeq == four.toSeq)
   }
 
+  test("a file:// URI checkpoint resumes and skips its completed buckets") {
+    val out = tmpDir("xjob-uri")
+    val ckpt = "file://" + tmpDir("xjob-uri-ckpt") + "/lineage"
+    val a = Args(rows = 200, out = out, checkpoint = ckpt, runId = "uri", buckets = 4)
+    assert(ExtractJob.run(spark, a).map(_.bucket).toSet == (0 until 4).toSet)
+    assert(Checkpoint.completedBuckets(spark, ckpt, "uri") == (0 until 4).toSet)
+    assert(ExtractJob.run(spark, a).isEmpty, "completed buckets were recomputed")
+  }
+
+  test("a checkpoint holding a corrupt parquet file fails loudly, not as 'no buckets done'") {
+    import graft.jobs.LineageRow
+    val ckpt = tmpDir("xjob-bad-ckpt") + "/lineage"
+    Checkpoint.append(spark, ckpt, Seq(LineageRow("r1", 0, "completed", 10, 10, 0, 100,
+      "balanced", new java.sql.Timestamp(System.currentTimeMillis()))))
+    java.nio.file.Files.write(java.nio.file.Paths.get(ckpt, "part-99999-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](Checkpoint.completedBuckets(spark, ckpt, "r1"))
+  }
+
   test("checkpoint retention delete drops only expired lineage rows") {
     import graft.jobs.{Checkpoint, LineageRow}
     val path = tmpDir("ckpt_ttl") + "/lineage"

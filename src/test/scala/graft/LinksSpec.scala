@@ -37,6 +37,10 @@ class LinksSpec extends SparkSuite {
     assert(Links.resolve(base, "mailto:x@example.com") == None)
     assert(Links.resolve(base, "javascript:void(0)") == None)
     assert(Links.resolve(base, "ht tp://bad") == None)
+    // Schemes match case-insensitively (RFC 3986 §3.1).
+    assert(Links.resolve(base, "HTTP://Host/a") == Some("HTTP://Host/a"))
+    assert(Links.resolve("HTTPS://Host5.example/p.html", "/about") == Some("HTTPS://Host5.example/about"))
+    assert(Links.resolve(base, "MAILTO:x@example.com") == None)
   }
 
   test("records: binary payloads produce zero rows, HTML resolves against its own host") {
