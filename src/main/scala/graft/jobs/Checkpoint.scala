@@ -37,6 +37,7 @@ object Checkpoint {
     */
   def completedBuckets(spark: SparkSession, path: String, runId: String): Set[Int] = {
     val (fs, p) = resolve(spark, path)
+    recover(fs, p)
     val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
       val name = s.getPath.getName
       !name.startsWith("_") && !name.startsWith(".")
@@ -53,9 +54,22 @@ object Checkpoint {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** Undo a retention swap (`cleanupExpired`) cut between its two
+    * renames: the table then lives only at `<path>.old`, so it moves
+    * back (CompactJob.recover's rule for `.compact_old`). Every entry
+    * point runs this first, so the crash can never read as "nothing done".
+    */
+  private def recover(fs: FileSystem, p: Path): Unit = {
+    val bak = p.suffix(".old")
+    if (!fs.exists(p) && fs.exists(bak))
+      require(fs.rename(bak, p), s"checkpoint restore failed at $p")
+  }
+
   /** Append lineage rows for buckets whose results were just written. */
   def append(spark: SparkSession, path: String, rows: Seq[LineageRow]): Unit = {
     import spark.implicits._
+    val (fs, p) = resolve(spark, path)
+    recover(fs, p)
     if (rows.nonEmpty)
       graft.app.TableIO.append(rows.toDF().coalesce(1), path)
   }
@@ -66,6 +80,7 @@ object Checkpoint {
     */
   def cleanupExpired(spark: SparkSession, path: String, ttlHours: Int = 24): Long = {
     val (fs, p) = resolve(spark, path)
+    recover(fs, p)
     if (!fs.exists(p)) return 0L
     val df = graft.app.TableIO.read(spark, path).cache()
     try {
@@ -73,8 +88,8 @@ object Checkpoint {
       val keep = df.where(col("completed_ts") >= lit(cutoff))
       val dropped = df.count() - keep.count()
       if (dropped > 0) {
-        val tmp = new Path(path + ".tmp")
-        val bak = new Path(path + ".old")
+        val tmp = p.suffix(".tmp")
+        val bak = p.suffix(".old")
         keep.write.format(graft.app.TableIO.format).mode(SaveMode.Overwrite).save(tmp.toString)
         fs.delete(bak, true) // a stale .old would make rename nest p inside it
         require(fs.rename(p, bak) && fs.rename(tmp, p), s"checkpoint swap failed at $path")

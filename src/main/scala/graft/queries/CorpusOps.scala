@@ -32,6 +32,142 @@ object CorpusOps {
     tbl(s, d, "documents")
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("term"))
 
+  /** Cross-document duplicated-span coverage, the engine of q70 and
+    * q85: hash every 8-token window, find windows occurring in >1
+    * document, mark the token positions they cover, and score each
+    * document by its duplicated-token fraction. `bloom` adds q85's
+    * pre-pass: the dup hashes fold into a distributed bloom filter that
+    * every window probes map-side before the coverage join's shuffle;
+    * the exact join drops bloom false positives, so both settings give
+    * the same rows.
+    */
+  private def dupSpanCoverage(s: SparkSession, d: String, bloom: Boolean): DataFrame = {
+    val t = tbl(s, d, "documents")
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .withColumn("n_toks", size(col("toks")))
+    // windows feeds BOTH the dup-set aggregation and the coverage
+    // join: materialize it once or the md5-per-window explode (the
+    // query's dominant cost) executes twice in one plan.
+    val windows = t.where(col("n_toks") >= 8)
+      .select(col("doc_id"),
+        posexplode(transform(sequence(lit(0), col("n_toks") - 8),
+          i => md5(concat_ws(" ",
+            (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
+      .toDF("doc_id", "pos", "h")
+      .localCheckpoint()
+    val dupSet = windows.groupBy("h")
+      .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
+    // With the bloom pre-pass the dup set feeds both the filter build
+    // and the exact join, so it is materialized once.
+    val (dups, probed) = if (!bloom) (dupSet, windows) else {
+      graft.plans.GraftFunctions.ensureRegistered(s)
+      val staged = dupSet.localCheckpoint()
+      val bloomBytes = staged
+        .agg(call_function("graft_bloom_agg", xxhash64(col("h")), lit(1000000L)))
+        .head.getAs[Array[Byte]](0)
+      (staged, windows.where(
+        call_function("graft_might_contain", lit(bloomBytes), xxhash64(col("h")))))
+    }
+    val covered = probed.join(dups, "h")
+      .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
+      .distinct()
+      .groupBy("doc_id").agg(count(lit(1)).as("covered"))
+    t.join(covered, Seq("doc_id"), "left")
+      .withColumn("covered", coalesce(col("covered"), lit(0L)))
+      .select(col("doc_id"), col("n_toks"), col("covered"),
+        round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
+          .as("dup_frac"))
+      .withColumn("keep",
+        col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
+      .orderBy("doc_id")
+  }
+
+  /** The oracle of q70 and q85 (q85's rows must equal q70's). */
+  private val DupSpanSql =
+    """WITH t AS (
+               SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
+               FROM documents),
+             base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
+             w AS (SELECT doc_id,
+                     [md5(array_to_string(toks[i+1:i+8], ' '))
+                        FOR i IN range(0, len(toks) - 7)] AS hs
+                   FROM base WHERE n_toks >= 8),
+             e AS (SELECT doc_id,
+                     unnest(hs) AS h,
+                     unnest(range(0, len(hs))) AS pos
+                   FROM w),
+             dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
+             cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
+                    FROM e JOIN dups USING (h)),
+             cov AS (SELECT doc_id, count(*) AS covered
+                     FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
+             SELECT b.doc_id, b.n_toks,
+                    CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
+                    round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
+                    (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
+             FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
+             ORDER BY b.doc_id"""
+
+  /** Per-doc cross-entropy under a corpus-trained add-one-smoothed word
+    * bigram model, the engine of q72 and q86: -avg ln P(w_i | w_{i-1}),
+    * P = (c2+1)/(c1+V). `pruned` is q86's production form: hapax
+    * bigrams (c2 < 2) leave the model, both model tables broadcast to a
+    * map-only scoring pass, and a pruned-away bigram scores as unseen
+    * (c2' = 0). (c1 always exists: it was counted from the very bigrams
+    * being scored.)
+    */
+  private def lmCrossEntropy(s: SparkSession, d: String, pruned: Boolean): DataFrame = {
+    val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
+    // bigram occurrences feed the two model aggregates AND the
+    // scoring join: materialize once so the explode runs once.
+    val bi = t.where(size(col("toks")) >= 2)
+      .select(col("doc_id"),
+        explode(transform(sequence(lit(0), size(col("toks")) - 2),
+          i => struct(element_at(col("toks"), i + 1).as("w1"),
+                      element_at(col("toks"), i + 2).as("w2")))).as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .localCheckpoint()
+    val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+    val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
+    val vocab = t.select(explode(col("toks")).as("w"))
+      .agg(countDistinct("w")).head.getLong(0)
+    val scored =
+      if (pruned) bi.join(broadcast(c2.where(col("c2") >= 2)), Seq("w1", "w2"), "left")
+        .join(broadcast(c1), Seq("w1"))
+      else bi.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
+    scored.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        sum(log((coalesce(col("c2"), lit(0L)) + lit(1)).cast("double") /
+                (col("c1") + lit(vocab)).cast("double"))).as("ll"))
+      .select(col("doc_id"), col("n_bigrams"),
+        round(-col("ll") / col("n_bigrams").cast("double"), 6)
+          .as(if (pruned) "cross_entropy_pruned" else "cross_entropy"))
+      .orderBy("doc_id")
+  }
+
+  /** The oracle of `lmCrossEntropy`: q72 (`pruned = false`) and q86. */
+  private def lmCrossEntropySql(pruned: Boolean): String = {
+    val (having, join, out) =
+      if (pruned) ("HAVING count(*) >= 2", "LEFT JOIN", "cross_entropy_pruned")
+      else ("", "JOIN", "cross_entropy")
+    raw"""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
+               FROM documents),
+             bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
+                    FROM t, unnest(range(1, len(toks))) AS u(i)
+                    WHERE len(toks) >= 2),
+             c2 AS (SELECT w1, w2, count(*) AS c2 FROM bi GROUP BY 1, 2 $having),
+             c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
+             v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
+                   FROM (SELECT unnest(toks) AS term FROM t)),
+             sc AS (SELECT doc_id, count(*) AS n_bigrams,
+                      sum(ln((coalesce(c2, 0) + 1.0) / (c1 + v))) AS ll
+                    FROM bi $join c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
+                    GROUP BY doc_id)
+             SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
+                    round(-ll / n_bigrams, 6) AS $out
+             FROM sc ORDER BY doc_id"""
+  }
+
   val defs: Seq[Q] = Seq(
 
     // ---- Inverted-index construction: term → document frequency, total
@@ -153,59 +289,8 @@ object CorpusOps {
     // catches partial copies crossing paragraph boundaries. The
     // shuffles carry only (hash128, doc_id, pos) triples and the final
     // per-doc roll-up; text never moves.
-    ("q70_dup_span_coverage",
-      (s, d) => {
-        val t = tbl(s, d, "documents")
-          .select(col("doc_id"), tokens(col("text")).as("toks"))
-          .withColumn("n_toks", size(col("toks")))
-        // windows feeds BOTH the dup-set aggregation and the coverage
-        // join: materialize it once or the md5-per-window explode (the
-        // query's dominant cost) executes twice in one plan.
-        val windows = t.where(col("n_toks") >= 8)
-          .select(col("doc_id"),
-            posexplode(transform(sequence(lit(0), col("n_toks") - 8),
-              i => md5(concat_ws(" ",
-                (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
-          .toDF("doc_id", "pos", "h")
-          .localCheckpoint()
-        val dups = windows.groupBy("h")
-          .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
-        val covered = windows.join(dups, "h")
-          .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
-          .distinct()
-          .groupBy("doc_id").agg(count(lit(1)).as("covered"))
-        t.join(covered, Seq("doc_id"), "left")
-          .withColumn("covered", coalesce(col("covered"), lit(0L)))
-          .select(col("doc_id"), col("n_toks"), col("covered"),
-            round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
-              .as("dup_frac"))
-          .withColumn("keep",
-            col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
-          .orderBy("doc_id")
-      },
-      Some("""WITH t AS (
-               SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
-             w AS (SELECT doc_id,
-                     [md5(array_to_string(toks[i+1:i+8], ' '))
-                        FOR i IN range(0, len(toks) - 7)] AS hs
-                   FROM base WHERE n_toks >= 8),
-             e AS (SELECT doc_id,
-                     unnest(hs) AS h,
-                     unnest(range(0, len(hs))) AS pos
-                   FROM w),
-             dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
-             cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
-                    FROM e JOIN dups USING (h)),
-             cov AS (SELECT doc_id, count(*) AS covered
-                     FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
-             SELECT b.doc_id, b.n_toks,
-                    CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
-                    round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
-                    (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
-             FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
-             ORDER BY b.doc_id""")),
+    ("q70_dup_span_coverage", (s, d) => dupSpanCoverage(s, d, bloom = false),
+      Some(DupSpanSql)),
 
     // ---- Statistical-LM fluency scoring (the CCNet/Wenzek et al. 2020
     // perplexity filter, with the KenLM 5-gram model replaced by a
@@ -220,47 +305,8 @@ object CorpusOps {
     // scale the model is trained once, pruned to top-M n-grams, and
     // BROADCAST to the scoring pass (the per-ingest cost is map-only);
     // here model and corpus are the same small table so plain joins win.
-    ("q72_lm_perplexity",
-      (s, d) => {
-        val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
-        // bigram occurrences feed the two model aggregates AND the
-        // scoring join: materialize once so the explode runs once.
-        val bi = t.where(size(col("toks")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("toks")) - 2),
-              i => struct(element_at(col("toks"), i + 1).as("w1"),
-                          element_at(col("toks"), i + 2).as("w2")))).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-          .localCheckpoint()
-        val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
-        val vocab = t.select(explode(col("toks")).as("w"))
-          .agg(countDistinct("w")).head.getLong(0)
-        bi.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(log((col("c2") + lit(1)).cast("double") /
-                    (col("c1") + lit(vocab)).cast("double"))).as("ll"))
-          .select(col("doc_id"), col("n_bigrams"),
-            round(-col("ll") / col("n_bigrams").cast("double"), 6).as("cross_entropy"))
-          .orderBy("doc_id")
-      },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-                    FROM t, unnest(range(1, len(toks))) AS u(i)
-                    WHERE len(toks) >= 2),
-             c2 AS (SELECT w1, w2, count(*) AS c2 FROM bi GROUP BY 1, 2),
-             c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-             v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
-                   FROM (SELECT unnest(toks) AS term FROM t)),
-             sc AS (SELECT doc_id, count(*) AS n_bigrams,
-                      sum(ln((c2 + 1.0) / (c1 + v))) AS ll
-                    FROM bi JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-                    GROUP BY doc_id)
-             SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-                    round(-ll / n_bigrams, 6) AS cross_entropy
-             FROM sc ORDER BY doc_id""")),
+    ("q72_lm_perplexity", (s, d) => lmCrossEntropy(s, d, pruned = false),
+      Some(lmCrossEntropySql(pruned = false))),
 
     // ---- Corpus length-distribution statistics: per-language
     // decimal-magnitude histogram (mag = number of digits of n_chars —
@@ -437,63 +483,8 @@ object CorpusOps {
     // q70: the oracle is q70's own SQL, and a green row proves the
     // prefilter lost nothing. `CorpusOpsSpec` additionally asserts the
     // candidate-set reduction actually happened.
-    ("q85_dup_span_bloom",
-      (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
-        val t = tbl(s, d, "documents")
-          .select(col("doc_id"), tokens(col("text")).as("toks"))
-          .withColumn("n_toks", size(col("toks")))
-        val windows = t.where(col("n_toks") >= 8)
-          .select(col("doc_id"),
-            posexplode(transform(sequence(lit(0), col("n_toks") - 8),
-              i => md5(concat_ws(" ",
-                (1 to 8).map(k => element_at(col("toks"), i + k)): _*)))))
-          .toDF("doc_id", "pos", "h")
-          .localCheckpoint()
-        val dups = windows.groupBy("h")
-          .agg(countDistinct("doc_id").as("nd")).where(col("nd") > 1).select("h")
-          .localCheckpoint()
-        val bloomBytes = dups
-          .agg(call_function("graft_bloom_agg", xxhash64(col("h")), lit(1000000L)))
-          .head.getAs[Array[Byte]](0)
-        val candidates = windows.where(
-          call_function("graft_might_contain", lit(bloomBytes), xxhash64(col("h"))))
-        val covered = candidates.join(dups, "h")
-          .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + 7)).as("cp"))
-          .distinct()
-          .groupBy("doc_id").agg(count(lit(1)).as("covered"))
-        t.join(covered, Seq("doc_id"), "left")
-          .withColumn("covered", coalesce(col("covered"), lit(0L)))
-          .select(col("doc_id"), col("n_toks"), col("covered"),
-            round(col("covered").cast("double") / col("n_toks").cast("double"), 6)
-              .as("dup_frac"))
-          .withColumn("keep",
-            col("covered").cast("double") / col("n_toks").cast("double") <= 0.5)
-          .orderBy("doc_id")
-      },
-      Some("""WITH t AS (
-               SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_toks, toks FROM t),
-             w AS (SELECT doc_id,
-                     [md5(array_to_string(toks[i+1:i+8], ' '))
-                        FOR i IN range(0, len(toks) - 7)] AS hs
-                   FROM base WHERE n_toks >= 8),
-             e AS (SELECT doc_id,
-                     unnest(hs) AS h,
-                     unnest(range(0, len(hs))) AS pos
-                   FROM w),
-             dups AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) > 1),
-             cp AS (SELECT doc_id, unnest(range(pos, pos + 8)) AS cp
-                    FROM e JOIN dups USING (h)),
-             cov AS (SELECT doc_id, count(*) AS covered
-                     FROM (SELECT DISTINCT doc_id, cp FROM cp) GROUP BY 1)
-             SELECT b.doc_id, b.n_toks,
-                    CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered,
-                    round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks, 6) AS dup_frac,
-                    (CAST(coalesce(cov.covered, 0) AS DOUBLE) / b.n_toks <= 0.5) AS keep
-             FROM base b LEFT JOIN cov ON b.doc_id = cov.doc_id
-             ORDER BY b.doc_id""")),
+    ("q85_dup_span_bloom", (s, d) => dupSpanCoverage(s, d, bloom = true),
+      Some(DupSpanSql)),
 
     // ---- q72's documented production variant, shipped: LM scoring
     // against a PRUNED model BROADCAST to a map-only scoring pass.
@@ -516,52 +507,8 @@ object CorpusOps {
     // >= q72's cross_entropy, with equality exactly for documents with
     // no hapax bigrams (`CorpusOpsSpec` asserts both, plus the
     // broadcast scoring plan).
-    ("q86_lm_broadcast_scoring",
-      (s, d) => {
-        val t = tbl(s, d, "documents").select(col("doc_id"), tokens(col("text")).as("toks"))
-        val bi = t.where(size(col("toks")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("toks")) - 2),
-              i => struct(element_at(col("toks"), i + 1).as("w1"),
-                          element_at(col("toks"), i + 2).as("w2")))).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-          .localCheckpoint()
-        val c2p = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-          .where(col("c2") >= 2) // the prune: hapax bigrams stay home
-        val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
-        val vocab = t.select(explode(col("toks")).as("w"))
-          .agg(countDistinct("w")).head.getLong(0)
-        // Map-only scoring: both model sides broadcast; unseen/pruned
-        // bigrams coalesce to c2'=0. (c1 always exists: it was counted
-        // from the very bigrams being scored.)
-        bi.join(broadcast(c2p), Seq("w1", "w2"), "left")
-          .join(broadcast(c1), Seq("w1"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(log((coalesce(col("c2"), lit(0L)) + lit(1)).cast("double") /
-                    (col("c1") + lit(vocab)).cast("double"))).as("ll"))
-          .select(col("doc_id"), col("n_bigrams"),
-            round(-col("ll") / col("n_bigrams").cast("double"), 6)
-              .as("cross_entropy_pruned"))
-          .orderBy("doc_id")
-      },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks
-               FROM documents),
-             bi AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-                    FROM t, unnest(range(1, len(toks))) AS u(i)
-                    WHERE len(toks) >= 2),
-             c2p AS (SELECT w1, w2, count(*) AS c2 FROM bi GROUP BY 1, 2
-                     HAVING count(*) >= 2),
-             c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-             v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS v
-                   FROM (SELECT unnest(toks) AS term FROM t)),
-             sc AS (SELECT doc_id, count(*) AS n_bigrams,
-                      sum(ln((coalesce(c2, 0) + 1.0) / (c1 + v))) AS ll
-                    FROM bi LEFT JOIN c2p USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-                    GROUP BY doc_id)
-             SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-                    round(-ll / n_bigrams, 6) AS cross_entropy_pruned
-             FROM sc ORDER BY doc_id""")),
+    ("q86_lm_broadcast_scoring", (s, d) => lmCrossEntropy(s, d, pruned = true),
+      Some(lmCrossEntropySql(pruned = true))),
 
     // ---- Cross-snapshot sketch drift: estimate how much two crawls'
     // shingle vocabularies overlap from their HLL REGISTERS ALONE —

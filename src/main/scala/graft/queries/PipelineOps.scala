@@ -4,7 +4,7 @@ import graft.plans.ExtractOperator
 import graft.json.JsonRepair
 import graft.model.Page
 import graft.synth.PageGen
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The extraction pipeline itself, exposed as driver-checkable queries.
@@ -26,6 +26,15 @@ object PipelineOps {
   /** Full extraction records of a page table (the GraftExtract operator). */
   private def extract(pages: Dataset[Page], quality: String): DataFrame =
     ExtractOperator.extract(pages.toDF(), quality, slim = false)
+
+  /** x65's target key: the resolved target minus its http(s) scheme and
+    * authority, always rooted — an authority-only target (`https://host`)
+    * keys as `/`, like `https://host/`. The query string stays in the
+    * key: `/search?q=a` and `/search?q=b` are different resources, and
+    * Links.resolve has already dropped the fragment.
+    */
+  private[graft] def linkPath(target: Column): Column =
+    regexp_replace(target, "(?i)^https?://[^/?#]*/?", "/")
 
   /** One binary "multimodal" record: treat payload as opaque bytes with
     * a stubbed decode (deterministic fake dims — the real image/audio
@@ -603,7 +612,7 @@ object PipelineOps {
             .map { case (t, a) => (p.url, t, a) })
           .toDF("src_url", "target", "anchor")
         recs
-          .withColumn("path", regexp_replace(col("target"), "^https?://[^/]+", ""))
+          .withColumn("path", linkPath(col("target")))
           .withColumn("src_host", regexp_extract(col("src_url"), "^https?://([^/]+)", 1))
           .groupBy("path", "anchor")
           .agg(count(lit(1)).as("n_links"),

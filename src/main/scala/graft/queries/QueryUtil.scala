@@ -28,24 +28,18 @@ object QueryUtil {
     */
   def tokens(c: Column): Column = regexp_extract_all(lower(c), lit("\\S+"), lit(0))
 
-  /** Distinct word 3-gram shingles over `tokens`; `< 3` tokens → empty.
-    * DuckDB side uses `list_transform(range(1, greatest(len-1,1)), ...)`
-    * (1-based, exclusive end) which yields the same `n-2` shingles.
+  /** Distinct word n-gram shingles over `tokens`; `< n` tokens → empty.
+    * DuckDB side uses `list_transform(range(1, greatest(len-n+2,1)), ...)`
+    * (1-based, exclusive end) which yields the same `len-n+1` shingles.
     */
-  def shingles3(toks: Column): Column =
-    when(size(toks) >= 3,
-      array_distinct(transform(sequence(lit(0), size(toks) - 3),
-        i => concat_ws(" ",
-          element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))))
+  def shingles(toks: Column, n: Int): Column =
+    when(size(toks) >= n,
+      array_distinct(transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", (1 to n).map(k => element_at(toks, i + k)): _*))))
       .otherwise(array().cast("array<string>"))
 
-  /** Jaccard similarity of two distinct-element arrays (reference
-    * tests/conftest.py:352-362 word-set Jaccard, generalized to shingle
-    * sets). Single IEEE division of two exact ints — bit-identical across
-    * engines.
-    */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
+  /** Word 3-gram shingles, the near-dup unit (q23/q24/Sketch). */
+  def shingles3(toks: Column): Column = shingles(toks, 3)
 
   /** Connected components over an undirected edge list by iterative
     * min-label propagation, run to convergence (the q35 core, shared
@@ -85,13 +79,6 @@ object QueryUtil {
     labels
   }
 
-  /** Guard for the O(n²) brute-force baselines (q23/q31): they broadcast
-    * the FULL corpus to every executor, which is correct and fast as a
-    * small-scale verifier but OOMs at production scale. Refuse loudly
-    * instead of silently melting a cluster; the scale paths are q24
-    * (MinHash-LSH) and q30/q32/q33 (LSH/IVF buckets). The count is a
-    * parquet metadata-only scan — effectively free.
-    */
   /** Lower-cased, www-/default-port-stripped host of a url — the same
     * normalization as the q54 canonicalizer (WebOps), extracted as the
     * single owner for every host-keyed stage (per-host cap, host
@@ -109,6 +96,13 @@ object QueryUtil {
     when(length(h) > 0, h).otherwise(lower(u))
   }
 
+  /** Guard for the O(n²) brute-force baselines (q23/q31): they broadcast
+    * the FULL corpus to every executor, which is correct and fast as a
+    * small-scale verifier but OOMs at production scale. Refuse loudly
+    * instead of silently melting a cluster; the scale paths are q24
+    * (MinHash-LSH) and q30/q32/q33 (LSH/IVF buckets). The count is a
+    * parquet metadata-only scan — effectively free.
+    */
   def requireBaselineScale(s: SparkSession, dir: String, table: String,
       query: String, maxRows: Long = 200000L): Unit = {
     val n = tbl(s, dir, table).count()

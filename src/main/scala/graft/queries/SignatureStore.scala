@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * so the read side never re-pays sketching or banding — the join key
   * work happened exactly once, at write time. The streaming path
   * (streaming.StreamingExtract.nearDedupBatch) has always written this
-  * layout; this module gives batch jobs the same store instead of the
-  * per-query localCheckpoint staging q24p/q53 use for their in-plan
-  * sketch reuse.
+  * layout; this module gives batch jobs the same store. Its verdicts
+  * (`verdictsAgainst`, behind q53 and q53s) and the streaming path both
+  * find and check pairs with the one LSH engine, Sketch.candidates and
+  * Sketch.verified.
   *
   * Scale shape (10^12 docs): the store grows one row per NOVEL document
   * and carries only ids + hashes (never text). At cluster scale it is a
@@ -32,9 +33,7 @@ object SignatureStore {
     * written for a stream to consume must use a negative id.
     */
   def write(docs: DataFrame, sigDir: String, ingestId: Long): Unit =
-    writeRows(
-      Sketch.sketch(docs).withColumn("bands", Sketch.bandSigs(col("sigs"))),
-      sigDir, ingestId)
+    writeRows(Sketch.banded(docs), sigDir, ingestId)
 
   /** Write ALREADY-SKETCHED rows (doc_id, hsh, bands, …extras) as one
     * ingest partition — THE single place that owns the on-disk layout;
@@ -57,10 +56,10 @@ object SignatureStore {
   }
 
   /** Near-dup verdicts of an arriving batch against a PRECOMPUTED store
-    * (the q53 semantics with the corpus side never re-sketched): every
-    * batch doc → (doc_id, verdict kept|dup, dup_of = min matching store
-    * doc). Only the batch is sketched; the band join carries (band_id,
-    * band_sig, id) rows; exact Jaccard verifies candidates only.
+    * (q53s) or an in-plan corpus sketch with bands (q53): every batch
+    * doc → (doc_id, verdict kept|dup, dup_of = min matching store doc).
+    * Only the batch is sketched; candidates and their exact-Jaccard
+    * verify come from the one engine, Sketch.candidates/verified.
     */
   def verdictsAgainst(batchDocs: DataFrame, store: DataFrame,
       threshold: Double = 0.5): DataFrame = {
@@ -68,20 +67,10 @@ object SignatureStore {
     // The batch sketch feeds both the band join and the verify join —
     // materialize so shingling runs once (store-side needs nothing: its
     // bands are precomputed).
-    val sk = Sketch.sketch(batchDocs)
-      .withColumn("bands", Sketch.bandSigs(col("sigs")))
-      .select("doc_id", "hsh", "bands")
-      .localCheckpoint()
-    val cand = Sketch.explodeBands(sk.select("doc_id", "bands"))
-      .withColumnRenamed("doc_id", "b_id")
-      .hint("shuffle_hash")
-      .join(Sketch.explodeBands(store.select("doc_id", "bands"))
-        .withColumnRenamed("doc_id", "c_id"), Seq("band_id", "band_sig"))
-      .select("b_id", "c_id").distinct()
-    val hits = cand
-      .join(sk.select(col("doc_id").as("b_id"), col("hsh").as("h_b")), Seq("b_id"))
-      .join(store.select(col("doc_id").as("c_id"), col("hsh").as("h_c")), Seq("c_id"))
-      .where(Sketch.jaccard(col("h_b"), col("h_c")) >= threshold)
+    val sk = Sketch.banded(batchDocs).select("doc_id", "hsh", "bands").localCheckpoint()
+    val cand = Sketch.candidates(Sketch.explodeBands(sk),
+      Some(Sketch.explodeBands(store)), pair = ("b_id", "c_id"))
+    val hits = Sketch.verified(cand, sk, store, threshold)
       .groupBy("b_id").agg(min("c_id").as("dup_of"))
     batchDocs.select("doc_id")
       .join(hits.withColumnRenamed("b_id", "doc_id"), Seq("doc_id"), "left")

@@ -4,14 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import QueryUtil._
 
-/** The production MinHash sketch shared by the batch near-dup operators
-  * (q24p, q53) and the streaming incremental dedup
-  * (streaming.StreamingExtract.nearDedupStream): 16 xxhash64-seeded
-  * minhashes over distinct word-3-gram shingles, banded 8×2 with the
-  * band signature compacted to one 64-bit key (the S-curve midpoint of
-  * 8×2 sits at J≈0.29, so recall at the 0.5 decision threshold is high
-  * and the exact-Jaccard verify removes every false candidate — the
-  * rationale measured in BENCH.md "Scale-path quality").
+/** The production MinHash sketch and the one LSH candidate-and-verify
+  * engine. The sketch: 16 xxhash64-seeded minhashes over distinct
+  * word-3-gram shingles, banded 8×2 with the band signature compacted
+  * to one 64-bit key (the S-curve midpoint of 8×2 sits at J≈0.29, so
+  * recall at the 0.5 decision threshold is high and the exact-Jaccard
+  * verify removes every false candidate — the rationale measured in
+  * BENCH.md "Scale-path quality").
+  *
+  * The engine — `candidates` (band-key join) then `verified` (exact
+  * Jaccard) — is the only band join in the code base. Its callers:
+  * q24/q35 (md5 4×4 family), q24p, q53/q53s (via
+  * SignatureStore.verdictsAgainst), q73 (SimHash bands, Hamming
+  * verify), VectorOps.bandedPairs (hyperplane bands, cosine verify),
+  * CorpusPipeline's near-dup stage and
+  * streaming.StreamingExtract.nearDedupBatch.
   *
   * All expressions are codegen'd column functions — changing them here
   * changes q24p/q53, whose DuckDB oracles (exact all-pairs Jaccard)
@@ -52,6 +59,12 @@ object Sketch {
     transform(sequence(lit(0), lit(Bands - 1)),
       b => xxhash64(b, concat_ws(",", slice(sigs, b * 2 + 1, lit(2)))))
 
+  /** `sketch` plus its 8 band signatures as a `bands` column — the row
+    * shape of the signature store (SignatureStore).
+    */
+  def banded(docs: DataFrame): DataFrame =
+    sketch(docs).withColumn("bands", bandSigs(col("sigs")))
+
   /** Sketch rows → (doc_id, band_id, band_sig) — the LSH join key rows.
     * The shuffle carries 8 bytes of signature per (doc, band).
     */
@@ -71,5 +84,43 @@ object Sketch {
   def jaccard(ha: Column, hb: Column): Column = {
     val c = call_function("sorted_intersect_count", ha, hb)
     c.cast("double") / (size(ha) + size(hb) - c).cast("double")
+  }
+
+  /** Candidate pairs of the LSH band join: ids of `left` and `right`
+    * band rows (idCol, band_id, band_sig) that share a band, as the
+    * distinct (pair._1, pair._2) pairs. `right = None` is the self-join,
+    * which keeps only pairs with pair._1 < pair._2. Any band family
+    * works: band_sig may be a 64-bit key, an md5 string or a bit string.
+    *
+    * Both sides repartition on the join keys BEFORE the id is renamed,
+    * so the two sides of a self-join are one identical Exchange subtree
+    * that ReuseExchange dedups — the band pipeline runs once, not twice.
+    * The left side is the hash join's build side.
+    */
+  def candidates(left: DataFrame, right: Option[DataFrame] = None,
+      idCol: String = "doc_id", pair: (String, String) = ("doc_a", "doc_b")): DataFrame = {
+    val (a, b) = pair
+    def keyed(df: DataFrame): DataFrame = df.select(idCol, "band_id", "band_sig")
+      .repartition(col("band_id"), col("band_sig"))
+    val l = keyed(left)
+    val joined = l.withColumnRenamed(idCol, a).hint("shuffle_hash")
+      .join(right.fold(l)(keyed).withColumnRenamed(idCol, b), Seq("band_id", "band_sig"))
+    (if (right.isEmpty) joined.where(col(a) < col(b)) else joined)
+      .select(a, b).distinct()
+  }
+
+  /** The candidate pairs whose exact shingle-set Jaccard reaches
+    * `threshold`: each side's sorted `hsh` array (from `sketch`) is
+    * joined onto the pairs — `left` holds the first id's sketch,
+    * `right` the second's — so shingle arrays move for candidates only.
+    */
+  def verified(pairs: DataFrame, left: DataFrame, right: DataFrame,
+      threshold: Double, idCol: String = "doc_id"): DataFrame = {
+    val Array(a, b) = pairs.columns
+    pairs
+      .join(left.select(col(idCol).as(a), col("hsh").as("h_a")), Seq(a))
+      .join(right.select(col(idCol).as(b), col("hsh").as("h_b")), Seq(b))
+      .where(jaccard(col("h_a"), col("h_b")) >= threshold)
+      .select(a, b)
   }
 }

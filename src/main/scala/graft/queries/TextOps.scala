@@ -30,6 +30,86 @@ object TextOps {
   private def docToks(s: SparkSession, d: String): DataFrame =
     tbl(s, d, "documents").withColumn("toks", tokens(col("text")))
 
+  /** q24/q35's md5 MinHash family over word 3-gram shingles:
+    * (doc_id, hsh: sorted xxhash64 shingle hashes for the exact verify,
+    * sigs: 16 seed-prefixed md5 minima from the single-pass codegen'd
+    * plans.MinhashMd5). md5 is the one hash both engines share, so the
+    * q24/q35 oracles pin this family; the production family is Sketch.
+    */
+  private def md5Sketch(s: SparkSession, d: String): DataFrame =
+    docToks(s, d).where(Sketch.hasShingles)
+      .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
+      .select(col("doc_id"),
+        array_sort(transform(col("shingles"), x => xxhash64(x))).as("hsh"),
+        call_function("minhash_md5", col("shingles")).as("sigs"))
+
+  /** md5Sketch rows → (doc_id, band_id, band_sig): 4 bands × 4 rows,
+    * each band signature the comma-joined 4 md5 minima.
+    */
+  private def md5Bands(sk: DataFrame): DataFrame =
+    sk.select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"), col("sigs"))
+      .select(col("doc_id"), col("band_id"),
+        concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))).as("band_sig"))
+
+  /** The oracles' shingle tables, the DuckDB mirror of tokens/shingles3:
+    * `t` (tokens) and `sh` (distinct word 3-gram shingles per doc).
+    */
+  private val ShingleCtes =
+    """t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
+             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
+                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t)"""
+
+  /** All-pairs exact shingle Jaccard `p`: the oracle of q23 and q24p. */
+  private val PairJaccardCtes =
+    s"""$ShingleCtes,
+             p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     CAST(len(list_intersect(a.shingles,b.shingles)) AS DOUBLE) /
+                     CAST(len(list_distinct(list_concat(a.shingles,b.shingles))) AS DOUBLE) AS j
+                   FROM sh a JOIN sh b ON a.doc_id < b.doc_id)"""
+
+  /** The md5 band table of q24's and q35's oracles (`md5Bands`). */
+  private val Md5BandCtes =
+    s"""$ShingleCtes,
+             tok AS (SELECT doc_id, unnest(shingles) AS tok FROM sh WHERE len(shingles) > 0),
+             mh AS (SELECT doc_id, s.seed, min(md5(s.seed || ':' || tok)) AS minh
+                    FROM tok CROSS JOIN (SELECT unnest(range(16)) AS seed) s
+                    GROUP BY doc_id, s.seed),
+             band AS (SELECT doc_id, seed // 4 AS band_id,
+                        string_agg(minh, ',' ORDER BY seed) AS band_sig
+                      FROM mh GROUP BY doc_id, seed // 4)"""
+
+  /** (doc_id, simhash): q25's 32-bit fingerprint, q73's band input. */
+  private def simhash(s: SparkSession, d: String): DataFrame = docToks(s, d)
+    .select(col("doc_id"), call_function("simhash_md5", array_distinct(col("toks"))).as("simhash"))
+
+  /** q25's simhash bit table, also the input of q73's oracle. */
+  private val SimhashBitsCtes =
+    """tok AS (SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '\S+'))) AS tok
+                           FROM documents),
+             bits AS (SELECT doc_id, j.j,
+                        CASE WHEN sum(CASE WHEN ascii(substr(md5(tok), j.j, 1)) % 2 = 1
+                                           THEN 1 ELSE -1 END) > 0
+                             THEN '1' ELSE '0' END AS bit
+                      FROM tok CROSS JOIN (SELECT unnest(range(1,33)) AS j) j
+                      GROUP BY doc_id, j.j)"""
+
+  /** Exact batch×corpus verdicts: the oracle of q53 and q53s. */
+  private val IncrementalDedupSql =
+    s"""WITH $ShingleCtes,
+             corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
+             batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
+             hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
+                      FROM batch b JOIN corpus c
+                        ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
+                           CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
+                      GROUP BY b.doc_id)
+             SELECT d.doc_id,
+               CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
+               CAST(h.dup_of AS BIGINT) AS dup_of
+             FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
+             LEFT JOIN hits h USING (doc_id)
+             ORDER BY doc_id"""
+
   val defs: Seq[Q] = Seq(
 
     // ---- Token counting (A4 word-count semantics, Python-split parity).
@@ -125,13 +205,7 @@ object TextOps {
           .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
           .orderBy("doc_a", "doc_b")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     CAST(len(list_intersect(a.shingles,b.shingles)) AS DOUBLE) /
-                     CAST(len(list_distinct(list_concat(a.shingles,b.shingles))) AS DOUBLE) AS j
-                   FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      Some(s"""WITH $PairJaccardCtes
              SELECT doc_a, doc_b, round(j,6) AS jaccard FROM p
              WHERE j >= 0.5 ORDER BY doc_a, doc_b""")),
 
@@ -142,47 +216,12 @@ object TextOps {
     ("q24_minhash_lsh",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        // Filter BEFORE deriving shingles, on a cheap equivalent
-        // precondition: shingles3 is non-empty iff the text has ≥3
-        // whitespace-separated tokens iff this regex finds a match.
-        // Filtering on size(shingles) > 0 instead gets pushed below the
-        // project, so the whole tokenize→shingle→distinct pipeline would
-        // evaluate once in the Filter and again in the Project.
-        val sh = docToks(s, d)
-          .where(col("text").rlike("\\S+\\s+\\S+\\s+\\S+"))
-          .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
-        // Single-pass codegen'd sketch (plans.MinhashMd5): same 16
-        // seed-prefixed md5 minima as the transform/array_min pipeline
-        // (equality property-tested in HashSketchSpec), none of its
-        // per-shingle allocation.
-        val sig = sh.withColumn("sigs",
-          call_function("minhash_md5", col("shingles")))
-        // Repartition on the join keys BEFORE the self-join: both sides
-        // then share one identical Exchange subtree, which Catalyst's
-        // ReuseExchange dedups — the expensive signature pipeline
-        // (shingle → 16 md5 minhashes) runs ONCE, not twice.
-        val bands = sig.select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"),
-            col("sigs"))
-          .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
-          .select("doc_id", "band_id", "band_sig")
-          .repartition(col("band_id"), col("band_sig"))
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-          .orderBy("doc_a", "doc_b")
+        // The shingle precondition filters BEFORE shingles are derived
+        // (Sketch.hasShingles); candidates come from the one band join,
+        // whose self-join shares one signature exchange.
+        Sketch.candidates(md5Bands(md5Sketch(s, d))).orderBy("doc_a", "doc_b")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             shl AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             tok AS (SELECT doc_id, unnest(shingles) AS tok FROM shl WHERE len(shingles) > 0),
-             mh AS (SELECT doc_id, s.seed, min(md5(s.seed || ':' || tok)) AS minh
-                    FROM tok CROSS JOIN (SELECT unnest(range(16)) AS seed) s
-                    GROUP BY doc_id, s.seed),
-             band AS (SELECT doc_id, seed // 4 AS band_id,
-                        string_agg(minh, ',' ORDER BY seed) AS band_sig
-                      FROM mh GROUP BY doc_id, seed // 4)
+      Some(s"""WITH $Md5BandCtes
              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM band a JOIN band b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
                AND a.doc_id < b.doc_id
@@ -212,26 +251,10 @@ object TextOps {
         // + verify live in queries.Sketch (shared with q53 and the
         // streaming incremental dedup).
         val enriched = Sketch.sketch(tbl(s, d, "documents")).localCheckpoint()
-        val bands = Sketch.bandRows(enriched)
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        val cand = a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        cand
-          .join(enriched.select(col("doc_id").as("doc_a"), col("hsh").as("sh_a")), Seq("doc_a"))
-          .join(enriched.select(col("doc_id").as("doc_b"), col("hsh").as("sh_b")), Seq("doc_b"))
-          .where(Sketch.jaccard(col("sh_a"), col("sh_b")) >= 0.5)
-          .select(col("doc_a"), col("doc_b"))
+        Sketch.verified(Sketch.candidates(Sketch.bandRows(enriched)), enriched, enriched, 0.5)
           .orderBy("doc_a", "doc_b")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     CAST(len(list_intersect(a.shingles,b.shingles)) AS DOUBLE) /
-                     CAST(len(list_distinct(list_concat(a.shingles,b.shingles))) AS DOUBLE) AS j
-                   FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      Some(s"""WITH $PairJaccardCtes
              SELECT doc_a, doc_b FROM p WHERE j >= 0.5 ORDER BY doc_a, doc_b""")),
 
     // ---- Incremental near-dup dedup: an ARRIVING BATCH (doc_id % 5 ==
@@ -249,45 +272,17 @@ object TextOps {
     // streams — per-ingest cost is O(batch), not O(corpus).
     ("q53_incremental_dedup",
       (s, d) => {
-        graft.plans.GraftFunctions.ensureRegistered(s)
-        val hashed = Sketch.sketch(tbl(s, d, "documents")).localCheckpoint()
-        val corpus = Sketch.bandRows(hashed.where(col("doc_id") % 5 =!= 0))
-        val batch = Sketch.bandRows(hashed.where(col("doc_id") % 5 === 0))
-          .withColumnRenamed("doc_id", "b_id")
-        val cand = batch.hint("shuffle_hash")
-          .join(corpus.withColumnRenamed("doc_id", "c_id"), Seq("band_id", "band_sig"))
-          .select(col("b_id"), col("c_id")).distinct()
-        val hits = cand
-          .join(hashed.select(col("doc_id").as("b_id"), col("hsh").as("h_b")), Seq("b_id"))
-          .join(hashed.select(col("doc_id").as("c_id"), col("hsh").as("h_c")), Seq("c_id"))
-          .where(Sketch.jaccard(col("h_b"), col("h_c")) >= 0.5)
-          .groupBy("b_id").agg(min("c_id").as("dup_of"))
-        // Every batch doc gets a verdict — including short docs the
-        // shingle precondition filtered out (no shingles → trivially kept).
-        tbl(s, d, "documents").where(col("doc_id") % 5 === 0)
-          .select(col("doc_id"))
-          .join(hits.withColumnRenamed("b_id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("dup_of").isNull, "kept").otherwise("dup").as("verdict"),
-            col("dup_of"))
+        // The corpus sketch is staged in-plan (localCheckpoint) where
+        // q53s reads the same rows from the on-disk store. Every batch
+        // doc gets a verdict — including short docs the shingle
+        // precondition filtered out (no shingles → trivially kept).
+        val docs = tbl(s, d, "documents")
+        val corpus = Sketch.banded(docs.where(col("doc_id") % 5 =!= 0)).localCheckpoint()
+        SignatureStore.verdictsAgainst(
+            docs.where(col("doc_id") % 5 === 0).select("doc_id", "text"), corpus)
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
-             batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
-             hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
-                      FROM batch b JOIN corpus c
-                        ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
-                           CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
-                      GROUP BY b.doc_id)
-             SELECT d.doc_id,
-               CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
-               CAST(h.dup_of AS BIGINT) AS dup_of
-             FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-             LEFT JOIN hits h USING (doc_id)
-             ORDER BY doc_id""")),
+      Some(IncrementalDedupSql)),
 
     // ---- q53 through the PERSISTENT signature store (the production
     // shape): run 1 writes the corpus sketch table once
@@ -316,22 +311,7 @@ object TextOps {
             SignatureStore.read(s, dir))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             corpus AS (SELECT * FROM sh WHERE doc_id % 5 != 0),
-             batch AS (SELECT * FROM sh WHERE doc_id % 5 = 0),
-             hits AS (SELECT b.doc_id AS doc_id, min(c.doc_id) AS dup_of
-                      FROM batch b JOIN corpus c
-                        ON CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE) /
-                           CAST(len(list_distinct(list_concat(b.shingles, c.shingles))) AS DOUBLE) >= 0.5
-                      GROUP BY b.doc_id)
-             SELECT d.doc_id,
-               CASE WHEN h.dup_of IS NULL THEN 'kept' ELSE 'dup' END AS verdict,
-               CAST(h.dup_of AS BIGINT) AS dup_of
-             FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-             LEFT JOIN hits h USING (doc_id)
-             ORDER BY doc_id""")),
+      Some(IncrementalDedupSql)),
 
     // ---- Paragraph-span dedup (the C4 "discard all but one of any
     // span occurring more than once" pass, at paragraph granularity).
@@ -455,28 +435,10 @@ object TextOps {
     ("q35_dup_clusters",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        // Same cheap ≥3-token precondition as q24 (see comment there).
-        val sh = docToks(s, d)
-          .where(col("text").rlike("\\S+\\s+\\S+\\s+\\S+"))
-          .select(col("doc_id"), shingles3(col("toks")).as("shingles"))
-        // Same single-pass sketch as q24 (plans.MinhashMd5).
-        val sig = sh.withColumn("sigs",
-          call_function("minhash_md5", col("shingles")))
-        val bands = sig.select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band_id"),
-            col("sigs"))
-          .withColumn("band_sig", concat_ws(",", slice(col("sigs"), col("band_id") * 4 + 1, lit(4))))
-          .select("doc_id", "band_id", "band_sig")
-          .repartition(col("band_id"), col("band_sig"))
-        val a = bands.withColumnRenamed("doc_id", "doc_a")
-        val b = bands.withColumnRenamed("doc_id", "doc_b")
-        val cand = a.hint("shuffle_hash").join(b, Seq("band_id", "band_sig"))
-          .where(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        val verified = cand
-          .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), Seq("doc_a"))
-          .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), Seq("doc_b"))
-          .where(jaccard(col("sh_a"), col("sh_b")) >= 0.5)
-          .select("doc_a", "doc_b")
+        // Same sketch and candidates as q24; the verify compares sorted
+        // xxhash64 shingle hashes, as q24p does under its exact oracle.
+        val sk = md5Sketch(s, d)
+        val verified = Sketch.verified(Sketch.candidates(md5Bands(sk)), sk, sk, 0.5)
         // Run-to-convergence min-label propagation: the shared
         // QueryUtil.connectedComponents core (localCheckpoint-truncated
         // lineage, loud runaway cap — rationale documented there).
@@ -484,22 +446,13 @@ object TextOps {
           .select(col("node").as("doc_id"), col("label").as("cluster_id"))
           .orderBy("doc_id")
       },
-      Some("""WITH RECURSIVE t AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS toks FROM documents),
-             shl AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(toks)-1,1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles FROM t),
-             tok AS (SELECT doc_id, unnest(shingles) AS tok FROM shl WHERE len(shingles) > 0),
-             mh AS (SELECT doc_id, s.seed, min(md5(s.seed || ':' || tok)) AS minh
-                    FROM tok CROSS JOIN (SELECT unnest(range(16)) AS seed) s
-                    GROUP BY doc_id, s.seed),
-             band AS (SELECT doc_id, seed // 4 AS band_id,
-                        string_agg(minh, ',' ORDER BY seed) AS band_sig
-                      FROM mh GROUP BY doc_id, seed // 4),
+      Some(s"""WITH RECURSIVE $Md5BandCtes,
              cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                       FROM band a JOIN band b ON a.band_id = b.band_id
                         AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
              verified AS (SELECT c.doc_a, c.doc_b FROM cand c
-                          JOIN shl x ON x.doc_id = c.doc_a
-                          JOIN shl y ON y.doc_id = c.doc_b
+                          JOIN sh x ON x.doc_id = c.doc_a
+                          JOIN sh y ON y.doc_id = c.doc_b
                           WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE) /
                                 CAST(len(list_distinct(list_concat(x.shingles, y.shingles))) AS DOUBLE) >= 0.5),
              edges AS (SELECT doc_a AS a, doc_b AS b FROM verified
@@ -523,20 +476,9 @@ object TextOps {
         // distinct token, all 32 parity counters updated in that same
         // pass — replaces 32 `aggregate` passes over an md5-hex array
         // (equality property-tested in HashSketchSpec).
-        docToks(s, d)
-          .withColumn("simhash",
-            call_function("simhash_md5", array_distinct(col("toks"))))
-          .select("doc_id", "simhash")
-          .orderBy("doc_id")
+        simhash(s, d).orderBy("doc_id")
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '\S+'))) AS tok
-                           FROM documents),
-             bits AS (SELECT doc_id, j.j,
-                        CASE WHEN sum(CASE WHEN ascii(substr(md5(tok), j.j, 1)) % 2 = 1
-                                           THEN 1 ELSE -1 END) > 0
-                             THEN '1' ELSE '0' END AS bit
-                      FROM tok CROSS JOIN (SELECT unnest(range(1,33)) AS j) j
-                      GROUP BY doc_id, j.j)
+      Some(s"""WITH $SimhashBitsCtes
              SELECT doc_id, string_agg(bit, '' ORDER BY j) AS simhash
              FROM bits GROUP BY doc_id ORDER BY doc_id""")),
 
@@ -555,31 +497,25 @@ object TextOps {
     // (fixed 16-bit keys mean ~n/65536 docs per bucket; the standard
     // fix is Manku et al. WWW'07's permuted-prefix tables keyed on
     // 30-40 bits, which this query's band column swaps in without
-    // changing the join). Scale: the only shuffles carry (band_id,
-    // band value, doc_id, sig); buckets are band-local so no all-pairs
-    // work; output is the per-doc neighbor roll-up (count/min/max pins
+    // changing the join). The band join is Sketch.candidates. Scale:
+    // the band shuffle carries (band_id, band value, doc_id) and only
+    // candidate pairs fetch signatures; buckets are band-local so no
+    // all-pairs work; output is the per-doc neighbor roll-up (count/min/max pins
     // the pair set through three independent aggregates).
     ("q73_simhash_hamming",
       (s, d) => {
         graft.plans.GraftFunctions.ensureRegistered(s)
-        val sig = docToks(s, d)
-          .withColumn("sig",
-            call_function("simhash_md5", array_distinct(col("toks"))))
-          .withColumn("sigv", conv(col("sig"), 2, 10).cast("long"))
-          .select("doc_id", "sig", "sigv")
-        val bands = sig.select(col("doc_id"), col("sigv"), explode(array(
-            struct(lit(0).as("band_id"), substring(col("sig"), 1, 16).as("band_val")),
-            struct(lit(1).as("band_id"), substring(col("sig"), 17, 16).as("band_val"))
+        val sig = simhash(s, d).withColumn("sigv", conv(col("simhash"), 2, 10).cast("long"))
+        val bands = sig.select(col("doc_id"), explode(array(
+            struct(lit(0).as("band_id"), substring(col("simhash"), 1, 16).as("band_sig")),
+            struct(lit(1).as("band_id"), substring(col("simhash"), 17, 16).as("band_sig"))
           )).as("b"))
-          .select(col("doc_id"), col("sigv"), col("b.band_id"), col("b.band_val"))
-        val a = bands.toDF("doc_a", "sig_a", "band_id", "band_val")
-        val b = bands.toDF("doc_b", "sig_b", "band_id", "band_val")
-        val pairs = a.join(b, Seq("band_id", "band_val"))
-          .where(col("doc_a") > col("doc_b"))
-          .select(col("doc_a"), col("doc_b"),
-            bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("ham"))
-          .where(col("ham") <= 1)
-          .distinct() // a pair may agree on both bands
+          .select(col("doc_id"), col("b.band_id"), col("b.band_sig"))
+        // A pair may agree on both bands; candidates are distinct.
+        val pairs = Sketch.candidates(bands, pair = ("doc_b", "doc_a"))
+          .join(sig.select(col("doc_id").as("doc_a"), col("sigv").as("sig_a")), "doc_a")
+          .join(sig.select(col("doc_id").as("doc_b"), col("sigv").as("sig_b")), "doc_b")
+          .where(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 1)
         val edges = pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("nb"))
           .union(pairs.select(col("doc_b").as("doc_id"), col("doc_a").as("nb")))
         val stats = edges.groupBy("doc_id")
@@ -593,14 +529,7 @@ object TextOps {
             coalesce(col("max_nb"), lit(-1L)).as("max_nb"))
           .orderBy("doc_id")
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '\S+'))) AS tok
-                           FROM documents),
-             bits AS (SELECT doc_id, j.j,
-                        CASE WHEN sum(CASE WHEN ascii(substr(md5(tok), j.j, 1)) % 2 = 1
-                                           THEN 1 ELSE -1 END) > 0
-                             THEN '1' ELSE '0' END AS bit
-                      FROM tok CROSS JOIN (SELECT unnest(range(1,33)) AS j) j
-                      GROUP BY doc_id, j.j),
+      Some(s"""WITH $SimhashBitsCtes,
              sig AS (SELECT doc_id, string_agg(bit, '' ORDER BY j) AS s
                      FROM bits GROUP BY doc_id),
              bd AS (SELECT doc_id, s, 0 AS band_id, substr(s, 1, 16) AS band_val FROM sig

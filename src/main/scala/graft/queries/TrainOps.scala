@@ -23,6 +23,22 @@ object TrainOps {
   private val W = 50 // window tokens
   private val S = 40 // stride (10-token overlap)
 
+  /** (doc_id, host, rk_key): the planted Zipf hosts (h0 carries ~1/3 of
+    * docs) and the md5 rank key, the input of q80 and q84.
+    */
+  private def hostKeyed(s: SparkSession, d: String): DataFrame =
+    tbl(s, d, "documents").select(col("doc_id"),
+      concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L))
+        .otherwise(col("doc_id") % 40)).as("host"),
+      md5(col("doc_id").cast("string")).as("rk_key"))
+
+  /** The oracle mirror of `hostKeyed`: the `t` CTE of q80's and q84's SQL. */
+  private val HostKeyedSql =
+    """WITH t AS (SELECT doc_id,
+               'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
+               md5(CAST(doc_id AS VARCHAR)) AS rk_key
+             FROM documents)"""
+
   val defs: Seq[Q] = Seq(
 
     // ---- Token-window chunking: document → overlapping W-token
@@ -172,12 +188,6 @@ object TrainOps {
     // is a map-side semi-join over the corpus — no corpus shuffle.
     ("q60_decontamination",
       (s, d) => {
-        def sh5(toks: org.apache.spark.sql.Column) =
-          when(size(toks) >= 5,
-            array_distinct(transform(sequence(lit(0), size(toks) - 5),
-              i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2),
-                element_at(toks, i + 3), element_at(toks, i + 4), element_at(toks, i + 5)))))
-            .otherwise(array().cast("array<string>"))
         // Tokenize into a materialized column first, and use
         // explode_OUTER: a plain explode makes Catalyst infer a
         // `size(sh) > 0 AND isnotnull(sh)` predicate and push it into
@@ -187,7 +197,7 @@ object TrainOps {
         // which the inner shingle join / distinct drop for free.
         val t = tbl(s, d, "documents")
           .withColumn("toks", tokens(col("text")))
-          .withColumn("sh", sh5(col("toks")))
+          .withColumn("sh", shingles(col("toks"), 5))
         val eval_ = t.where(col("doc_id") % 50 === 0)
           .select(explode_outer(col("sh")).as("shingle"))
           .where(col("shingle").isNotNull).distinct()
@@ -236,20 +246,13 @@ object TrainOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val k = 10
-        tbl(s, d, "documents")
-          .withColumn("host",
-            concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L))
-              .otherwise(col("doc_id") % 40)))
-          .withColumn("rk_key", md5(col("doc_id").cast("string")))
+        hostKeyed(s, d)
           .withColumn("rk", row_number().over(
             Window.partitionBy("host").orderBy(col("rk_key"), col("doc_id"))))
           .select(col("doc_id"), col("host"), col("rk"), (col("rk") <= k).as("kept"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id,
-               'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
-               md5(CAST(doc_id AS VARCHAR)) AS rk_key
-             FROM documents),
+      Some(s"""$HostKeyedSql,
              r AS (SELECT doc_id, host,
                CAST(row_number() OVER (PARTITION BY host ORDER BY rk_key, doc_id) AS INT) AS rk
              FROM t)
@@ -273,13 +276,7 @@ object TrainOps {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val k = 10
-        val base = tbl(s, d, "documents")
-          .withColumn("host",
-            concat(lit("h"), when(col("doc_id") % 3 === 0, lit(0L))
-              .otherwise(col("doc_id") % 40)))
-          .select(col("doc_id"), col("host"),
-            md5(col("doc_id").cast("string")).as("rk_key"))
-        val survivors = base.as[(Long, String, String)].mapPartitions { it =>
+        val survivors = hostKeyed(s, d).as[(Long, String, String)].mapPartitions { it =>
           import scala.collection.mutable
           // max-heap per host: the root is the WORST kept pair, evicted
           // the moment a better one arrives — O(hosts·K) memory per task.
@@ -303,10 +300,7 @@ object TrainOps {
           .select(col("doc_id"), col("host"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id,
-               'h' || (CASE WHEN doc_id % 3 = 0 THEN 0 ELSE doc_id % 40 END) AS host,
-               md5(CAST(doc_id AS VARCHAR)) AS rk_key
-             FROM documents),
+      Some(s"""$HostKeyedSql,
              r AS (SELECT doc_id, host,
                row_number() OVER (PARTITION BY host ORDER BY rk_key, doc_id) AS rk
              FROM t)

@@ -118,7 +118,7 @@ object VectorOps {
     * carry (band_id, bits-wide key, vec_id); vectors move only for
     * candidates, and every emitted pair passed the exact cosine
     * verify (sound by construction; recall is the measured knob —
-    * VectorOpsLshSpec).
+    * VectorOpsLshSpec). The band join is Sketch.candidates.
     */
   private[graft] def bandedPairs(e: DataFrame, bands: Int, bits: Int,
       threshold: Double, dim: Int = 64): DataFrame = {
@@ -127,13 +127,8 @@ object VectorOps {
       transform(sequence(lit(0), lit(bands - 1)), b =>
         concat_ws("", transform(sequence(lit(0), lit(bits - 1)), k =>
           hyperplaneBit(w, b * bits + k, col("v"))))).as("bands"))
-    val bandsDf = sig.select(col("vec_id"),
-      posexplode(col("bands")).as(Seq("band_id", "band_key")))
-    val cand = bandsDf.toDF("vid_a", "band_id", "band_key")
-      .join(bandsDf.toDF("vid_b", "band_id", "band_key"), Seq("band_id", "band_key"))
-      .where(col("vid_a") < col("vid_b"))
-      .select("vid_a", "vid_b").distinct()
-    cand
+    Sketch.candidates(Sketch.explodeBands(sig, idCol = "vec_id"),
+        idCol = "vec_id", pair = ("vid_a", "vid_b"))
       .join(e.select(col("vec_id").as("vid_a"), col("v").as("va"), col("nrm").as("na")), Seq("vid_a"))
       .join(e.select(col("vec_id").as("vid_b"), col("v").as("vb"), col("nrm").as("nb")), Seq("vid_b"))
       .withColumn("cos", dot("va", "vb") / (col("na") * col("nb")))
@@ -181,7 +176,7 @@ object VectorOps {
   private[graft] def semanticDedupKept(s: SparkSession, d: String,
       threshold: Double, k: Int = 8): DataFrame = {
     // assign feeds both join sides — materialize the Lloyd pass once
-    // (q33's rationale).
+    // (ivfTopk's rationale).
     val assign = ivfAssign(s, d, k = k).localCheckpoint()
     val a = assign.select(col("cell"), col("vec_id").as("vid_a"),
       col("v").as("va"), col("nrm").as("na"))
@@ -196,6 +191,20 @@ object VectorOps {
       .join(pruned, Seq("vec_id"), "left_anti")
       .orderBy("vec_id")
   }
+
+  /** The oracle of q92 (`kExpr` = 8) and q92p (`ivfKSql`): the
+    * within-cell cosine prune of `semanticDedupKept`.
+    */
+  private def semanticDedupSql(kExpr: String): String = ivfAssignSqlK(kExpr) +
+    """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
+         sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
+       FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
+       JOIN e ea ON ea.vec_id = a.vec_id
+       JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
+       GROUP BY 1,2),
+    pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
+    SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
+    ORDER BY vec_id"""
 
   /** Data-derived IVF centroids (replaces round-2's md5-derived ones,
     * whose recall was unrepresentative — BENCH.md measured 1/30
@@ -251,6 +260,53 @@ object VectorOps {
     dots.withColumn("rn", row_number().over(w)).where(col("rn") <= probes)
       .select("vec_id", "cell", "v", "nrm")
   }
+
+  /** IVF top-3 neighbors of the first 10 vectors, the engine of q33
+    * (`probes = 1`: a query searches only its own cell) and q39 (its
+    * top-`probes` cells).
+    */
+  private def ivfTopk(s: SparkSession, d: String, probes: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // One Lloyd pass shared by both probe depths, and the corpus
+    // assignment materialized once for the join's neighbor side.
+    val cents = ivfCentroids(s, d).localCheckpoint()
+    val assign = ivfAssign(s, d, centroids = Some(cents)).localCheckpoint()
+    val queries = if (probes == 1) assign else ivfAssign(s, d, probes, Some(cents))
+    val q = queries.where(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("cell"),
+        col("v").as("qv"), col("nrm").as("qn"))
+    val n = assign.select(col("vec_id").as("neighbor_id"), col("cell"),
+      col("v").as("nv"), col("nrm").as("nn"))
+    val scored = n.join(broadcast(q), Seq("cell"))
+      .where(col("neighbor_id") =!= col("query_id"))
+      .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
+      .select("query_id", "neighbor_id", "cos").distinct()
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= 3)
+      .select("query_id", "rank", "neighbor_id")
+      .orderBy("query_id", "rank")
+  }
+
+  /** The oracle of `ivfTopk` (q33, q39). */
+  private def ivfTopkSql(probes: Int): String = ivfAssignSql +
+    s""", probes AS (SELECT vec_id, cell FROM (
+         SELECT vec_id, cell,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell) AS rn
+         FROM dotsn) WHERE rn <= $probes),
+    p AS (SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
+          FROM probes q JOIN assign n ON q.cell = n.cell AND q.vec_id <> n.vec_id
+          WHERE q.vec_id < 10),
+    sc AS (SELECT p.query_id, p.neighbor_id,
+             sum(eq.v*en.v)/(sqrt(sum(eq.v*eq.v))*sqrt(sum(en.v*en.v))) AS cos
+           FROM p JOIN e eq ON eq.vec_id = p.query_id
+           JOIN e en ON en.vec_id = p.neighbor_id AND en.i = eq.i
+           GROUP BY 1,2),
+    rk AS (SELECT query_id, neighbor_id,
+             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+           FROM sc)
+    SELECT query_id, rank, neighbor_id FROM rk WHERE rank <= 3
+    ORDER BY query_id, rank"""
 
   /** Corpus-sized cell count for the production quantizer (q92p): one
     * cell per ~64 vectors, floored at the teaching variant's 8 and
@@ -382,85 +438,13 @@ object VectorOps {
     // ---- IVF top-k: queries search ONLY their own cell (the ANN scale
     // path — recall trades against the 8× candidate reduction; the
     // brute-force q29 is its exact-recall verifier).
-    ("q33_ivf_topk",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        // assign feeds both the query and neighbor sides: materialize it
-        // once (same rationale as q24p's `enriched`).
-        val assign = ivfAssign(s, d).localCheckpoint()
-        val q = assign.where(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("cell"),
-            col("v").as("qv"), col("nrm").as("qn"))
-        val n = assign.select(col("vec_id").as("neighbor_id"), col("cell"),
-          col("v").as("nv"), col("nrm").as("nn"))
-        val scored = n.join(broadcast(q), Seq("cell"))
-          .where(col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
-        val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 3)
-          .select("query_id", "rank", "neighbor_id")
-          .orderBy("query_id", "rank")
-      },
-      Some(ivfAssignSql +
-        """, p AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             sum(eq.v*en.v)/(sqrt(sum(eq.v*eq.v))*sqrt(sum(en.v*en.v))) AS cos
-           FROM assign q JOIN assign n ON q.cell = n.cell AND q.vec_id <> n.vec_id
-           JOIN e eq ON eq.vec_id = q.vec_id
-           JOIN e en ON en.vec_id = n.vec_id AND en.i = eq.i
-           WHERE q.vec_id < 10
-           GROUP BY 1,2),
-        rk AS (SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM p)
-        SELECT query_id, rank, neighbor_id FROM rk WHERE rank <= 3
-        ORDER BY query_id, rank""")),
+    ("q33_ivf_topk", (s, d) => ivfTopk(s, d, probes = 1), Some(ivfTopkSql(probes = 1))),
 
     // ---- Multi-probe IVF top-k: queries search their top-3 cells
     // instead of one — the recall knob (measured: 1-probe 3%, 3-probe
     // 53% of exact top-3 on this corpus; BENCH.md). Corpus side stays
     // single-assigned; only query fan-out grows.
-    ("q39_ivf_multiprobe",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        // One Lloyd pass shared by both probe depths, and the corpus
-        // assignment materialized once for the join's neighbor side.
-        val cents = ivfCentroids(s, d).localCheckpoint()
-        val assign = ivfAssign(s, d, centroids = Some(cents)).localCheckpoint()
-        val probes = ivfAssign(s, d, probes = 3, centroids = Some(cents))
-        val q = probes.where(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("cell"),
-            col("v").as("qv"), col("nrm").as("qn"))
-        val n = assign.select(col("vec_id").as("neighbor_id"), col("cell"),
-          col("v").as("nv"), col("nrm").as("nn"))
-        val scored = n.join(broadcast(q), Seq("cell"))
-          .where(col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos", dot("qv", "nv") / (col("qn") * col("nn")))
-          .select("query_id", "neighbor_id", "cos").distinct()
-        val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 3)
-          .select("query_id", "rank", "neighbor_id")
-          .orderBy("query_id", "rank")
-      },
-      Some(ivfAssignSql +
-        """, probes AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell) AS rn
-             FROM dotsn) WHERE rn <= 3),
-        p AS (SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-              FROM probes q JOIN assign n ON q.cell = n.cell AND q.vec_id <> n.vec_id
-              WHERE q.vec_id < 10),
-        sc AS (SELECT p.query_id, p.neighbor_id,
-                 sum(eq.v*en.v)/(sqrt(sum(eq.v*eq.v))*sqrt(sum(en.v*en.v))) AS cos
-               FROM p JOIN e eq ON eq.vec_id = p.query_id
-               JOIN e en ON en.vec_id = p.neighbor_id AND en.i = eq.i
-               GROUP BY 1,2),
-        rk AS (SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM sc)
-        SELECT query_id, rank, neighbor_id FROM rk WHERE rank <= 3
-        ORDER BY query_id, rank""")),
+    ("q39_ivf_multiprobe", (s, d) => ivfTopk(s, d, probes = 3), Some(ivfTopkSql(probes = 3))),
 
     // ---- LSH-banded embedding near-dup (q31's SCALE PATH, the same
     // closure q73 gives SimHash): 16 md5-derived hyperplanes in 4 bands
@@ -537,17 +521,7 @@ object VectorOps {
     // buckets; a cell never does).
     ("q92_semantic_dedup",
       (s, d) => semanticDedupKept(s, d, threshold = 0.4),
-      // (oracle below; q92p follows with the corpus-sized quantizer)
-      Some(ivfAssignSql +
-        """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
-             sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
-           FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
-           GROUP BY 1,2),
-        pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
-        SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
-        ORDER BY vec_id""")),
+      Some(semanticDedupSql("8"))),
 
     // ---- PRODUCTION semantic dedup (q92's scale fix, the q74p
     // treatment applied to the quantizer): cell count derived from
@@ -562,16 +536,7 @@ object VectorOps {
         val n = tbl(s, d, "embeddings").count()
         semanticDedupKept(s, d, threshold = 0.4, k = ivfK(n))
       },
-      Some(ivfAssignSqlK(ivfKSql) +
-        """, pc AS (SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
-             sum(ea.v*eb.v)/(sqrt(sum(ea.v*ea.v))*sqrt(sum(eb.v*eb.v))) AS cos
-           FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id AND eb.i = ea.i
-           GROUP BY 1,2),
-        pruned AS (SELECT DISTINCT vid_b FROM pc WHERE cos >= 0.4)
-        SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT vid_b FROM pruned)
-        ORDER BY vec_id""")),
+      Some(semanticDedupSql(ivfKSql))),
 
     // ---- All-pairs cosine near-dup (embedding near-duplicate detection
     // baseline; ids only — rank order is FP-stable, raw scores are not).

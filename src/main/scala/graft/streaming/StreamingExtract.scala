@@ -327,7 +327,10 @@ object StreamingExtract {
     * production hash family), LSH-banded against (a) itself and (b) the
     * signature store accumulated from every earlier batch, candidates
     * are verified with exact shingle-set Jaccard, and only novel
-    * documents are emitted. This is the streaming form of the
+    * documents are emitted. Band join and verify are the one LSH engine,
+    * queries.Sketch.candidates/verified — the same code behind q24p,
+    * q53/q53s (SignatureStore.verdictsAgainst) and CorpusPipeline's
+    * near-dup stage. This is the streaming form of the
     * oracle-verified q53 operator — `foreachBatch` + an explicit
     * signature table instead of a keyed state store, because the LSH
     * verdict needs cross-key coordination (a document's B bands must be
@@ -395,9 +398,7 @@ object StreamingExtract {
     // Band signatures are computed once here and PERSISTED with the
     // sketch, so later batches' band joins read precomputed 64-bit keys
     // instead of re-hashing the whole store every trigger.
-    val sk = Sketch.sketch(batch)
-      .withColumn("bands", Sketch.bandSigs(col("sigs")))
-      .localCheckpoint()
+    val sk = Sketch.banded(batch).localCheckpoint()
     val bandsB = Sketch.explodeBands(sk)
 
     // Signature store from earlier batches (absent on the first). Keep
@@ -419,31 +420,21 @@ object StreamingExtract {
       else None
     }
 
-    // Candidates: within-batch (min doc_id survives) ∪ batch-vs-store
-    // (the store doc always survives). Both joins are on the compact
-    // 64-bit band keys; the verify join pulls shingle-hash arrays for
+    // Candidates: within-batch (min doc_id survives, so the pair is
+    // named (doc_b, doc_a) with doc_b < doc_a) ∪ batch-vs-store (the
+    // store doc always survives). Both come from the one band join
+    // (Sketch.candidates); the verify pulls shingle-hash arrays for
     // candidates only.
-    val a = bandsB.withColumnRenamed("doc_id", "doc_a")
-    val b = bandsB.withColumnRenamed("doc_id", "doc_b")
-    val inBatch = a.join(b, Seq("band_id", "band_sig"))
-      .where(col("doc_a") > col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val inBatch = Sketch.candidates(bandsB, pair = ("doc_b", "doc_a")).select("doc_a", "doc_b")
     val cands = store match {
-      case Some(st) =>
-        inBatch.unionByName(
-          bandsB.withColumnRenamed("doc_id", "doc_a")
-            .join(Sketch.explodeBands(st).withColumnRenamed("doc_id", "doc_b"),
-              Seq("band_id", "band_sig"))
-            .select("doc_a", "doc_b").distinct())
+      case Some(st) => inBatch.unionByName(
+        Sketch.candidates(bandsB, Some(Sketch.explodeBands(st))))
       case None => inBatch
     }
     val allSk = store
       .map(st => sk.select("doc_id", "hsh", "bands").unionByName(st))
       .getOrElse(sk.select("doc_id", "hsh", "bands"))
-    val dups = cands
-      .join(sk.select(col("doc_id").as("doc_a"), col("hsh").as("h_a")), Seq("doc_a"))
-      .join(allSk.select(col("doc_id").as("doc_b"), col("hsh").as("h_b")), Seq("doc_b"))
-      .where(Sketch.jaccard(col("h_a"), col("h_b")) >= threshold)
+    val dups = Sketch.verified(cands, sk, allSk, threshold)
       .select(col("doc_a").as("doc_id")).distinct()
 
     val kept = batch.join(dups, Seq("doc_id"), "left_anti")

@@ -46,6 +46,43 @@ class CorpusPipelineSpec extends SparkSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("plan: the near-dup stage's band self-join reuses one exchange (final adaptive plan)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // The stage's count is the execution that runs the exact-Jaccard verify.
+    val nearDup = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (funcName == "count" && plan.contains("sorted_intersect_count")) nearDup.put(plan)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // A planted near-dup pair keeps the verify branch in the final plan
+    // (adaptive execution drops an anti-join against an empty drop set).
+    import spark.implicits._
+    val core = (1 to 40).map(i => s"core$i")
+    def page(words: Seq[String]): String =
+      s"<html><body><article><p>${words.mkString(" ")}.</p></article></body></html>"
+    val inDir = tmpDir("cp_plan_in")
+    Seq(("https://x.example/a", page(core)),
+        ("https://x.example/c", page(core.take(36) ++ (1 to 4).map(i => s"cext$i"))),
+        ("https://x.example/s", page((1 to 40).map(i => s"solo$i"))))
+      .toDF("url", "h")
+      .select(col("url"), col("h").cast("binary").as("html"), lit("en").as("lang"))
+      .write.mode("overwrite").parquet(inDir)
+    spark.listenerManager.register(listener)
+    try {
+      val stages = CorpusPipeline.run(spark, Args(input = inDir, out = tmpDir("cp_plan"))).toMap
+      assert(stages("near_dedup") == stages("exact_dedup") - 1, s"stages: $stages")
+      val plan = nearDup.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(plan != null, "no near-dup count was observed")
+      assert(plan.contains("isFinalPlan=true"), s"plan did not finalize:\n$plan")
+      assert(QueryOpsSpec.reusesBandExchange(plan),
+        s"no band exchange reuse in the near-dup plan:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("a run without --provenance clears the sidecar an earlier run left in --out") {
     val out = tmpDir("cp_prov_stale")
     CorpusPipeline.run(spark, Args(rows = 400, out = out, provenance = true))

@@ -264,6 +264,23 @@ class ExtractJobSpec extends SparkSuite {
     assert(left.length == 1 && left(0).getAs[Int]("bucket") == 1)
   }
 
+  test("a retention swap cut between its renames keeps the completed buckets") {
+    import graft.jobs.LineageRow
+    val path = tmpDir("ckpt_swap_crash") + "/lineage"
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    Checkpoint.append(spark, path, (0 until 3).map(b =>
+      LineageRow("r1", b, "completed", 10, 10, 0, 100, "balanced", now)))
+    val before = Checkpoint.completedBuckets(spark, path, "r1")
+    assert(before == Set(0, 1, 2))
+    // cleanupExpired renames p → p.old, then p.tmp → p; a crash after the
+    // first rename leaves the table only at p.old (and a written p.tmp).
+    val dir = java.nio.file.Paths.get(path)
+    java.nio.file.Files.move(dir, dir.resolveSibling("lineage.old"))
+    java.nio.file.Files.createDirectories(dir.resolveSibling("lineage.tmp"))
+    assert(Checkpoint.completedBuckets(spark, path, "r1") == before)
+    assert(java.nio.file.Files.isDirectory(dir), "the table was not restored to its path")
+  }
+
   test("lang filter reaches the parquet scan (pushdown before the kernel)") {
     import graft.app.ExtractJob
     val dir = tmpDir("pages_pd")

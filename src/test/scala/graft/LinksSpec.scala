@@ -51,6 +51,15 @@ class LinksSpec extends SparkSuite {
     assert(recs == Seq(("https://h.example/r1", "Related")))
   }
 
+  test("x65 path key: authority-only targets key as the root path") {
+    import spark.implicits._
+    val targets = Seq("https://h.example", "https://h.example/", "http://h.example/a/b",
+      "https://h.example?q=1", "https://h.example/s?q=1", "HTTP://H.example/up")
+    val keys = targets.toDF("t")
+      .select(graft.queries.PipelineOps.linkPath($"t")).as[String].collect().toSeq
+    assert(keys == Seq("/", "/", "/a/b", "/?q=1", "/s?q=1", "/up"))
+  }
+
   test("x65 golden: link-record aggregate over the deterministic 1200-page corpus") {
     val rows = SparkEntry.queries("x65_link_records")(spark, "")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{PipelineOps, QueryUtil}
+import graft.queries.{PipelineOps, QueryUtil, Sketch}
 import org.apache.spark.sql.functions._
 
 /** Specs for the driver-checkable query surface: pinned semantics for
@@ -38,9 +38,10 @@ class QueryOpsSpec extends SparkSuite {
 
   test("jaccard: exact int/int division") {
     import spark.implicits._
-    val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d"))).toDF("x", "y")
-      .select(QueryUtil.jaccard(col("x"), col("y")).as("j"))
-    assert(one[Double](df) == 0.5) // |{b,c}| / |{a,b,c,d}|
+    graft.plans.GraftFunctions.ensureRegistered(spark)
+    val df = Seq((Seq(1L, 2L, 3L), Seq(2L, 3L, 4L))).toDF("x", "y")
+      .select(Sketch.jaccard(col("x"), col("y")).as("j"))
+    assert(one[Double](df) == 0.5) // |{2,3}| / |{1,2,3,4}|
   }
 
   test("SparkEntry wiring: oracle keys ⊆ queries, entry non-empty") {
@@ -205,6 +206,17 @@ class QueryOpsSpec extends SparkSuite {
     assert(plan.contains("isFinalPlan=true"), s"plan did not finalize:\n$plan")
     assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"),
       s"no exchange reuse in final q24 plan:\n$plan")
+  }
+
+  test("plan: q24p self-join reuses one band exchange (final adaptive plan)") {
+    // The same rule as q24 through Sketch.candidates: the band rows are
+    // repartitioned before the self-join renames the id, so both sides
+    // read one shuffle.
+    val df = SparkEntry.queries("q24p_minhash_prod")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true"), s"plan did not finalize:\n$plan")
+    assert(QueryOpsSpec.reusesBandExchange(plan), s"no band exchange reuse in final q24p plan:\n$plan")
   }
 
   test("q53 incremental dedup: batch verdicts are exact and corpus-only") {
@@ -382,4 +394,10 @@ class QueryOpsSpec extends SparkSuite {
     assert(found.exists { case (_, _, na, nb, inter, _) =>
       inter.toDouble / (na + nb - inter) < 0.5 })
   }
+}
+
+object QueryOpsSpec {
+  /** A reused exchange of band rows (keyed on band_sig) in a plan string. */
+  def reusesBandExchange(plan: String): Boolean =
+    plan.linesIterator.exists(l => l.contains("ReusedExchange") && l.contains("band_sig"))
 }
